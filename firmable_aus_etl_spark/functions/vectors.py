@@ -592,26 +592,21 @@ def lsh_multiprobe_topk(
     probes: int = 10,
     seed: int = 42,
     impl: str = "expr",
-    fetch: str = "late",
-    _stage: str | None = None,
 ) -> DataFrame:
     """Query-directed multi-probe sign-LSH top-k (round-3 verdict item
     #2 — single-bucket probing measured recall 0.35 on the near-uniform
     fixture; multi-probe recovers the neighbors that fall JUST across a
     hyperplane).
 
-    ``fetch`` controls WHERE the vectors attach (round-10 decade-3
-    repair): ``"late"`` (default) joins table/signature keys with IDS
-    ONLY, dedups the (query, neighbor) pairs on a ~24-byte shuffle row,
-    and fetches each side's vector ONCE per distinct candidate by id
-    equi-join — so the probe-exploded join and the distinct carry no
-    vector payload. ``"early"`` is the legacy plan that carried both
-    64-dim vectors (~1 KB/row) through the exploded join — its
-    occupancy law was measured INTACT at syn30 (sum occ^2 sub-linear,
-    tools/lsh_depth_probe.py) while wall time cliffed 2.78x, isolating
-    the per-candidate payload as the cost; kept for the A/B probe,
-    not for use. Same results either way: vectors are functionally
-    dependent on ids, so distinct-then-fetch = fetch-then-distinct.
+    Vectors attach late (round-10 decade-3 repair): the probe-exploded
+    join on table/signature keys carries IDS ONLY, the (query, neighbor)
+    pairs dedup on a ~24-byte shuffle row, and each side's vector is
+    fetched ONCE per distinct candidate by id equi-join. The earlier
+    plan carried both 64-dim vectors (~1 KB/row) through the exploded
+    join and measured 1.70x slower at syn10 and 1.53x at syn30 (its
+    occupancy law stayed intact, isolating the per-candidate payload
+    as the cost). Vectors are functionally dependent on ids, so
+    distinct-then-fetch gives the same results as fetch-then-distinct.
 
     Per table, a query probes not only its own bucket but the
     ``probes`` buckets with the smallest *boundary distance*: flipping
@@ -684,30 +679,18 @@ def lsh_multiprobe_topk(
     if impl == "arrow":
         c0 = _plane_dots_arrow(
             corpus, planes_flat=flat, id_col=corpus_id, vec_col=vec_col
-        ).select(
-            F.col("__id").alias("neighbor_id"),
-            F.col("__v").alias("__cv"),
-            l2_norm(F.col("__v")).alias("__cn"),
-            "__dots",
-        )
+        ).select(F.col("__id").alias("neighbor_id"), "__dots")
     else:
         c0 = ensure_parallelism(corpus, corpus_id).select(
             F.col(corpus_id).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            l2_norm(F.col(vec_col)).alias("__cn"),
             dots_col().alias("__dots"),
         )
-    cs_cols = ["neighbor_id"] if fetch == "late" else ["neighbor_id", "__cv", "__cn"]
     cs = c0.select(
-        *cs_cols,
+        "neighbor_id",
         F.posexplode(F.array(*[table_sig(t) for t in range(n_tables)])).alias(
             "__table", "__sig"
         ),
     )
-    if _stage == "corpus_sigs":
-        # measurement-only early exit (tools/lsh_stage_split_probe.py):
-        # the corpus signature stage alone — never a query path
-        return cs
 
     # ---- queries: materialize dots+sigs behind projection boundaries
     # (the flip-cost expressions below reference them ~30x per table;
@@ -716,23 +699,14 @@ def lsh_multiprobe_topk(
     if impl == "arrow":
         q0 = _plane_dots_arrow(
             queries, planes_flat=flat, id_col=query_id, vec_col=vec_col
-        ).select(
-            F.col("__id").alias("query_id"),
-            F.col("__v").alias("__qv"),
-            l2_norm(F.col("__v")).alias("__qn"),
-            "__dots",
-        )
+        ).select(F.col("__id").alias("query_id"), "__dots")
     else:
         q0 = ensure_parallelism(queries, query_id).select(
             F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            l2_norm(F.col(vec_col)).alias("__qn"),
             dots_col().alias("__dots"),
         )
     q1 = q0.select(
         "query_id",
-        "__qv",
-        "__qn",
         "__dots",
         F.array(*[table_sig(t) for t in range(n_tables)]).alias("__sigs"),
     )
@@ -758,16 +732,12 @@ def lsh_multiprobe_topk(
             f"transform(slice(array_sort(array({structs})), 1, {probes}), x -> x.s)"
         )
 
-    qp_cols = ["query_id"] if fetch == "late" else ["query_id", "__qv", "__qn"]
     qp = q1.select(
-        *qp_cols,
+        "query_id",
         F.posexplode(F.array(*[probe_list(t) for t in range(n_tables)])).alias(
             "__table", "__probes"
         ),
-    ).select(*qp_cols, "__table", F.explode("__probes").alias("__sig"))
-    if _stage == "query_probes":
-        # measurement-only early exit: signature + probe-ranking stage
-        return qp
+    ).select("query_id", "__table", F.explode("__probes").alias("__sig"))
 
     joined = qp.alias("q").join(
         cs.alias("c"),
@@ -777,38 +747,27 @@ def lsh_multiprobe_topk(
             F.col("query_id") != F.col("neighbor_id"),
         ],
     )
-    if _stage == "join_raw":
-        # measurement-only early exit: candidate join WITHOUT the dedup
-        return joined.select("query_id", "neighbor_id")
+    pairs = joined.select("query_id", "neighbor_id").distinct()
     if k is None:
         # telemetry surface: the distinct candidate pairs themselves
-        # (recall without its candidate cost is half a number) —
-        # projected BEFORE the distinct so no vector payload rides
-        # the dedup shuffle
-        return joined.select("query_id", "neighbor_id").distinct()
-    if fetch == "late":
-        # id-only dedup, then ONE vector fetch per distinct candidate
-        # side — narrow second scans of the inputs (no plane dots), so
-        # the 64-dim payload never multiplies by probes x occupancy
-        pairs = joined.select("query_id", "neighbor_id").distinct()
-        qvec = queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            l2_norm(F.col(vec_col)).alias("__qn"),
-        )
-        cvec = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            l2_norm(F.col(vec_col)).alias("__cn"),
-        )
-        cand = pairs.join(qvec, "query_id").join(cvec, "neighbor_id")
-    else:
-        # norms hoisted to one fold per ROW upstream: per-pair scoring
-        # is a single dot fold (bit-identical to cosine(): same fold
-        # orders, same two doubles multiplied — brute_force_topk move)
-        cand = joined.select(
-            "query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn"
-        ).distinct()
+        # (recall without its candidate cost is half a number)
+        return pairs
+    # ONE vector fetch per distinct candidate side — narrow second
+    # scans of the inputs (no plane dots), so the 64-dim payload never
+    # multiplies by probes x occupancy. Norms are hoisted to one fold
+    # per ROW: per-pair scoring is a single dot fold (bit-identical to
+    # cosine(): same fold orders, same two doubles multiplied).
+    qvec = queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        l2_norm(F.col(vec_col)).alias("__qn"),
+    )
+    cvec = corpus.select(
+        F.col(corpus_id).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+        l2_norm(F.col(vec_col)).alias("__cn"),
+    )
+    cand = pairs.join(qvec, "query_id").join(cvec, "neighbor_id")
     scored = cand.withColumn(
         "cosine",
         dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),

@@ -233,10 +233,31 @@ def encode_bpe(
     )
     rules = list(merges)
 
+    # The kernel references no module-level function: cloudpickle ships
+    # those by reference, which would make every Python worker import
+    # this package (and fail wherever it is not on the worker's path).
+    # So the _apply_merge fusion is restated inline, branch for branch.
     def enc_word(w: str) -> list[str]:
         syms = list(w) + [END]
         for a, b in rules:
-            syms = _apply_merge(syms, a, b)
+            out: list[str] = []
+            pend = False
+            for s in syms:
+                if pend and s == b:
+                    out.append(a + b)
+                    pend = False
+                elif pend and s == a:
+                    out.append(a)
+                elif pend:
+                    out.extend([a, s])
+                    pend = False
+                elif s == a:
+                    pend = True
+                else:
+                    out.append(s)
+            if pend:
+                out.append(a)
+            syms = out
         return syms
 
     def fn(batches):

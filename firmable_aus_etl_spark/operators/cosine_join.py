@@ -609,7 +609,6 @@ def weighted_simhash_candidates(
     block_cols: Sequence[str] = (),
     width: int = 8,
     chunks: int = 4,
-    emit_blocks: bool = True,
 ) -> DataFrame:
     """Sign-LSH candidate pairs for WEIGHTED cosine similarity
     (Charikar, "Similarity Estimation Techniques from Rounding
@@ -645,19 +644,17 @@ def weighted_simhash_candidates(
     on corpora where exact joins go quadratic (every token's df ∝ n —
     see SCALING.md round-7/8): signature cost is one linear aggregate,
     candidate cost is bucket-bounded, verify touches candidates only.
-    Returns (a_id, b_id, [blocks...]) with a_id < b_id, distinct.
+    Returns (a_id, b_id) with a_id < b_id, distinct.
 
-    ``emit_blocks=False`` (round-11, guide §2.3 keys-not-payloads —
-    the ANN late-fetch move transferred to the banded arm): the
-    candidate DEDUP groups on (a_id, b_id) ONLY, so the distinct's
-    exchange carries two longs per row instead of also dragging the
-    block strings through band_count x occupancy candidate rows.
-    Sound because each doc id belongs to exactly ONE block (the
-    signature aggregate groups by (id, blocks) and ids are unique
-    across blocks), so blocks are functionally dependent on a_id —
-    dedup-then-reattach = dedup-with-blocks. Callers that verify via
-    the term relation (which re-attaches block columns through the
-    doc-id join anyway) should prefer this shape.
+    The candidate DEDUP groups on (a_id, b_id) ONLY (round-11
+    keys-not-payloads, the ANN late-fetch move transferred to the
+    banded arm): the distinct's exchange carries two longs per row
+    instead of also dragging the block strings through band_count x
+    occupancy candidate rows. Blocks are not returned: each doc id
+    belongs to exactly ONE block (the signature aggregate groups by
+    (id, blocks) and ids are unique across blocks), so blocks are
+    functionally dependent on a_id and a verify that needs them
+    re-attaches them through a doc-id join.
 
     reference scope: op22 scale path at the scale the reference never
     reaches (entity_matching_optimized.py:122-191 scores all pairs
@@ -721,13 +718,11 @@ def weighted_simhash_candidates(
         F.col("l.__id") < F.col("r.__id"),
     ]
     on += [F.col(f"l.{c}") == F.col(f"r.{c}") for c in blocks]
-    out_cols = [
-        F.col("l.__id").alias("a_id"),
-        F.col("r.__id").alias("b_id"),
-    ]
-    if emit_blocks:
-        out_cols += [F.col(f"l.{c}") for c in blocks]
-    return l.join(r, on=on).select(*out_cols).distinct()
+    return (
+        l.join(r, on=on)
+        .select(F.col("l.__id").alias("a_id"), F.col("r.__id").alias("b_id"))
+        .distinct()
+    )
 
 
 def build_tfidf_index(

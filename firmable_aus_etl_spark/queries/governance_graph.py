@@ -139,7 +139,12 @@ def q_bigram_pmi_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("w", F.col("i")).alias("a"),
         F.element_at("w", F.col("i") + 1).alias("b"),
     )
-    uni = toks.select(F.explode("w").alias("t"))
+    # explode_outer + null-drop: an inner explode makes
+    # InferFiltersFromGenerate push `size(<tokenize>) > 0` onto the scan,
+    # running the tokenize regex twice per document
+    uni = toks.select(F.explode_outer("w").alias("t")).filter(
+        F.col("t").isNotNull()
+    )
     uc = uni.groupBy("t").agg(F.count("*").alias("c"))
     bc = bgp.groupBy("a", "b").agg(F.count("*").alias("cab"))
     tot = uni.agg(F.count("*").alias("nu")).crossJoin(

@@ -1722,7 +1722,6 @@ def _cosine_verify_top1(
     cand: DataFrame,
     *,
     threshold: float = 0.7,
-    cand_has_blocks: bool = True,
 ) -> DataFrame:
     """Shared exact-cosine verify + top-1 tail of every candidate-
     generating cosine route (simhash, tau-banded, embedding-ANN —
@@ -1732,8 +1731,8 @@ def _cosine_verify_top1(
     shared tokens (same-block enforced through the token join), norms,
     threshold, top-1 per a_id with the (cosine desc, b_id) tie-break,
     cosine rounded to 6 — token-for-token the arithmetic of
-    _TFIDF_ORACLE's verify stage."""
-    a_join = ["a_id", "source", "lang"] if cand_has_blocks else ["a_id"]
+    _TFIDF_ORACLE's verify stage. ``cand`` carries (a_id, b_id) only;
+    the a-side join re-attaches the blocks."""
     a_all = wt.select(
         F.col("doc_id").alias("a_id"), "source", "lang", "t",
         F.col("wt").alias("wa"),
@@ -1743,7 +1742,7 @@ def _cosine_verify_top1(
         F.col("wt").alias("wb"),
     )
     dots = (
-        cand.join(a_all, a_join)
+        cand.join(a_all, "a_id")
         .join(b_all, ["b_id", "source", "lang", "t"])
         .groupBy("a_id", "b_id")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dp"))
@@ -1835,11 +1834,6 @@ def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
             "baked CASE matrix — do NOT clamp (round-8 lesson)"
         )
     wt = _tfidf_portable_weight_frame(spark, sf_dir)
-    # emit_blocks=False (round-11, guide §2.3): the candidate dedup
-    # exchanges (a_id, b_id) only — blocks are functionally dependent
-    # on a_id and the verify join re-attaches them through a_all, so
-    # results are identical while the distinct's shuffle rows shrink
-    # from (2 longs + 2 strings) to 2 longs.
     cand = weighted_simhash_candidates(
         wt,
         id_col="doc_id",
@@ -1848,9 +1842,8 @@ def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_cols=["source", "lang"],
         width=width,
         chunks=chunks,
-        emit_blocks=False,
     )
-    return _cosine_verify_top1(wt, cand, cand_has_blocks=False)
+    return _cosine_verify_top1(wt, cand)
 
 
 # Exact-route budget for the auto-routed cosine join: the exact
@@ -2169,9 +2162,7 @@ def _embedding_ann_cosine_top1(
         F.least("query_id", "neighbor_id").alias("a_id"),
         F.greatest("query_id", "neighbor_id").alias("b_id"),
     ).distinct()
-    return _cosine_verify_top1(
-        wt, pairs, threshold=threshold, cand_has_blocks=False
-    )
+    return _cosine_verify_top1(wt, pairs, threshold=threshold)
 
 
 @register("tfidf_cosine_tau_routed", _tfidf_tau_routed_oracle())
@@ -2226,8 +2217,6 @@ def q_tfidf_cosine_tau_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "widen the baked CASE matrix — do NOT clamp (round-8 lesson)"
         )
     wt = _tfidf_portable_weight_frame(spark, sf_dir)
-    # id-only candidate dedup, same reasoning as the simhash route
-    # (round-11 late-fetch transfer, guide §2.3)
     cand = weighted_simhash_candidates(
         wt,
         id_col="doc_id",
@@ -2236,9 +2225,8 @@ def q_tfidf_cosine_tau_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_cols=["source", "lang"],
         width=width,
         chunks=chunks,
-        emit_blocks=False,
     )
-    return _cosine_verify_top1(wt, cand, cand_has_blocks=False)
+    return _cosine_verify_top1(wt, cand)
 
 
 _BM25_QUERIES = [

@@ -3,6 +3,11 @@ textbook implementation, encode round-trip, compression monotonicity."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from firmable_aus_etl_spark.datasets import load_table
@@ -56,3 +61,25 @@ def test_encode_round_trip_and_compression(spark):
         assert n <= b[did]
     # and the corpus-level compression is real
     assert sum(n for _, n in e.values()) < 0.95 * sum(b.values())
+
+
+def test_encode_runs_outside_the_repo(tmp_path):
+    # Python workers start in the caller's working directory with no
+    # PYTHONPATH: the encode kernel must not need this package there.
+    repo = str(Path(__file__).resolve().parents[1])
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from firmable_aus_etl_spark.queries import PIPELINE_QUERIES\n"
+        "from firmable_aus_etl_spark.session import get_session\n"
+        "s = get_session('bpe-cwd', master='local[2]', shuffle_partitions=2)\n"
+        f"rows = PIPELINE_QUERIES['bpe_token_stats'](s, {SF!r}).collect()\n"
+        "print('ROWS', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS " in proc.stdout and "ROWS 0" not in proc.stdout, proc.stdout

@@ -397,6 +397,7 @@ def test_weighted_simhash_candidates_python_parity(spark):
     cand = weighted_simhash_candidates(
         wt, id_col="doc_id", token_col="t", weight_col="wi"
     )
+    assert cand.columns == ["a_id", "b_id"]
     got = {(r.a_id, r.b_id) for r in cand.collect()}
     assert (1, 2) in got and (3, 6) in got, got
     # identical signatures were the reason: confirm via the reference

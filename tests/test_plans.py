@@ -77,6 +77,64 @@ def test_no_python_udf_on_benchmarked_paths(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
+def _inferred_size_args(cond: str) -> list[str]:
+    """Arguments X of every `size(X, ...) > 0` term in a Filter
+    condition — the predicate shape InferFiltersFromGenerate adds."""
+    out, i = [], cond.find("size(")
+    while i != -1:
+        depth = 0
+        for j in range(i + 4, len(cond)):
+            depth += {"(": 1, ")": -1}.get(cond[j], 0)
+            if depth == 0:
+                break
+        if cond[j + 1 :].startswith(" > 0"):
+            out.append(cond[i + 5 : j])
+        i = cond.find("size(", i + 5)
+    return out
+
+
+def test_no_expensive_inferred_filter_below_generates(spark):
+    # InferFiltersFromGenerate adds `size(x) > 0` for an INNER generate
+    # over an attribute; filter pushdown then substitutes x's defining
+    # expression and moves the filter below the parse's repartition
+    # exchange, re-running the whole tokenize + shingle + hash pipeline
+    # on the raw scan's few tasks (the zipf30 straggler). Generates over
+    # parsed arrays are *_outer + null-drop, so no such filter may
+    # re-evaluate a parse-stage expression. Checked on every headline
+    # plan with a Generate, plus the two Generate sites headline does
+    # not reach at this scale: the naive shingle join and the df-order
+    # prefix join.
+    import re
+
+    import bench
+    from firmable_aus_etl_spark.datasets import load_table
+    from firmable_aus_etl_spark.operators import dedup
+
+    expensive = ("regexp_replace", "concat_ws", "xxhash64(", "aggregate(", "md5(")
+    docs = load_table(spark, SF, "documents")
+    frames = {name: bench.ALL_QUERIES[name](spark, SF) for name in bench.HEADLINE}
+    frames["ngram_jaccard_near_dups"] = QUERIES["ngram_jaccard_near_dups"](spark, SF)
+    frames["prefix_order_df"] = dedup.ngram_jaccard_pairs_prefix(
+        docs, "doc_id", "text", shingle_n=3, threshold=0.5, order="df"
+    )
+    checked, flagged = [], {}
+    for name, df in frames.items():
+        plan = plans.physical_plan(df)
+        if not re.search(r"\(\d+\) Generate\b", plan):
+            continue
+        checked.append(name)
+        conds = re.findall(
+            r"\(\d+\) Filter[^\n]*\nInput[^\n]*\nCondition : ([^\n]*)", plan
+        )
+        hits = sorted(
+            {t for c in conds for a in _inferred_size_args(c) for t in expensive if t in a}
+        )
+        if hits:
+            flagged[name] = hits
+    assert {"ngram_jaccard_near_dups", "prefix_order_df"} <= set(checked), checked
+    assert not flagged, flagged
+
+
 def test_plan_report_shape(spark):
     rep = plans.plan_report(QUERIES["pricing_summary"](spark, SF))
     assert rep["exchanges"] >= 1
