@@ -14,7 +14,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from firmable_aus_etl_spark.datasets import load_table
+from firmable_aus_etl_spark.datasets import load_table, table_stat
 from firmable_aus_etl_spark.operators import aggregates as agg
 from firmable_aus_etl_spark.operators import dedup, joins
 from firmable_aus_etl_spark.operators.windows import topk_per_group
@@ -89,5 +89,6 @@ __all__ = [
     "load_table",
     "register",
     "register_pipeline",
+    "table_stat",
     "topk_per_group",
 ]

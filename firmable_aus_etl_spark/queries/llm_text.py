@@ -6,9 +6,6 @@ registration order preserved by the package __init__ import order.
 
 from __future__ import annotations
 
-from contextlib import contextmanager as _contextmanager
-from time import perf_counter as _perf_counter
-
 from firmable_aus_etl_spark.queries._base import *  # noqa: F401,F403
 
 # =========================================================================
@@ -1332,45 +1329,6 @@ def _tfidf_weight_frame(
     )
 
 
-# planner-statistics memo for the adaptive tfidf dispatch (see below),
-# keyed on (path, max parquet mtime) so in-process regeneration of the
-# table (test fixtures, notebook reuse) invalidates the entry instead
-# of serving a stale plan
-_TFIDF_PLAN_CACHE: dict[tuple, dict] = {}
-
-# Wall-seconds spent computing the memoized sizing statistics above and
-# below (the planner "ANALYZE" jobs: tfidf plan sample, route mass,
-# docs count, bloom eval count), accumulated on every cache MISS.
-# The bench reads deltas of this to report sizing_jobs_sec per adaptive
-# query (round-10 verdict item 6): min-of-N timings exclude these jobs
-# after run 1, so their recurring cost must be visible somewhere honest
-# instead of silently vanishing from the headline.
-SIZING_SECONDS: dict[str, float] = {}
-
-
-@_contextmanager
-def _sizing_job(stat: str):
-    t0 = _perf_counter()
-    try:
-        yield
-    finally:
-        SIZING_SECONDS[stat] = SIZING_SECONDS.get(stat, 0.0) + (
-            _perf_counter() - t0
-        )
-
-
-def _tfidf_cache_key(sf_dir: str) -> tuple:
-    import glob
-    import os as _os
-
-    pat = _os.path.join(sf_dir, "documents.parquet")
-    paths = glob.glob(pat) if _os.path.exists(pat) else []
-    if _os.path.isdir(pat):
-        paths = glob.glob(_os.path.join(pat, "*"))
-    mtime = max((_os.path.getmtime(p) for p in paths), default=0.0)
-    return (sf_dir, round(mtime, 3))
-
-
 @register("tfidf_cosine_top1", _TFIDF_ORACLE)
 def q_tfidf_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op22 DEFAULT — TF-IDF cosine similarity join (reference:
@@ -1402,31 +1360,27 @@ def q_tfidf_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition top-k heap, no shuffle), estimated driver-side.
     # The decision is invariant to the sample rate (both cost
     # estimates scale by rate^2), so no corpus count is needed.
-    # Memoized per (table path, file mtime) — planner statistics,
-    # like any engine's ANALYZE output, are reusable across repeated
-    # plannings of the same input and invalidate when the files
-    # change (deterministic: same table -> same sample -> same plan).
-    # Bench note: min-of-N timings therefore exclude the planning
-    # scan after the first run — disclosed in bench methodology.
-    _ck = _tfidf_cache_key(sf_dir)
-    if _ck not in _TFIDF_PLAN_CACHE:
-        with _sizing_job("tfidf_plan_sample"):
-            sample = (
-                load_table(spark, sf_dir, "documents")
-                .select(
-                    "source", "lang",
-                    F.split(normalize_name(F.col("text")), " ").alias("toks"),
-                    F.xxhash64("doc_id").alias("h"),
-                )
-                .orderBy("h")
-                .limit(512)
-                .collect()
+    # A table_stat: same table -> same sample -> same plan. Bench
+    # note: min-of-N timings therefore exclude the planning scan after
+    # the first run — disclosed in bench methodology.
+    def plan() -> dict:
+        sample = (
+            load_table(spark, sf_dir, "documents")
+            .select(
+                "source", "lang",
+                F.split(normalize_name(F.col("text")), " ").alias("toks"),
+                F.xxhash64("doc_id").alias("h"),
             )
-            _TFIDF_PLAN_CACHE[_ck] = estimate_cosine_plan(
-                [((r["source"], r["lang"]), r["toks"]) for r in sample],
-                threshold=0.7,
-            )
-    dec = _TFIDF_PLAN_CACHE[_ck]
+            .orderBy("h")
+            .limit(512)
+            .collect()
+        )
+        return estimate_cosine_plan(
+            [((r["source"], r["lang"]), r["toks"]) for r in sample],
+            threshold=0.7,
+        )
+
+    dec = table_stat(sf_dir, "documents", "tfidf_plan", plan)
 
     wt = _tfidf_weight_frame(spark, sf_dir)
     pairs = cosine_join_adaptive(
@@ -1768,23 +1722,6 @@ def _cosine_verify_top1(
 
 
 
-def _docs_count(spark: SparkSession, sf_dir: str) -> int:
-    """Memoized documents row count per (path, mtime) — the one input
-    of the simhash banding sizing rule (and the cheap half of
-    _tfidf_route_stats; kept separate so the standalone simhash query
-    never pays the candidate-mass aggregate)."""
-    key = _tfidf_cache_key(sf_dir)
-    if key not in _DOCS_COUNT_CACHE:
-        with _sizing_job("docs_count"):
-            _DOCS_COUNT_CACHE[key] = load_table(
-                spark, sf_dir, "documents"
-            ).count()
-    return _DOCS_COUNT_CACHE[key]
-
-
-_DOCS_COUNT_CACHE: dict[tuple, int] = {}
-
-
 @register("tfidf_cosine_simhash_top1", _tfidf_simhash_oracle())
 def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op22 DESIGNATED SCALE ROUTE, banding AUTO-SIZED (round-8
@@ -1825,7 +1762,10 @@ def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighted_simhash_candidates,
     )
 
-    n_docs = _docs_count(spark, sf_dir)
+    n_docs = table_stat(
+        sf_dir, "documents", "rows",
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
     width, chunks = auto_simhash_bands(n_docs)
     if width > SIMHASH_ORACLE_MAX_WIDTH:
         raise RuntimeError(
@@ -1858,46 +1798,44 @@ def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zipf1/zipf3 at 2599/7767 (LSH).
 _COSINE_ROUTE_CAP = 1024
 
-# routing-statistics memo, same (path, mtime) lifetime as the
-# naive-vs-prefix planner cache above
-_TFIDF_ROUTE_CACHE: dict[tuple, dict] = {}
-
 
 def _tfidf_route_stats(spark: SparkSession, sf_dir: str) -> dict:
     """ANALYZE pass for the cosine route: n_docs and the EXACT
     candidate mass Sum_{(source,lang,token)} C(df,2) of the exact
     inverted-index join. Integer counts — bit-identical in any engine,
     so the route decision can never straddle engines. One aggregate
-    job + one count, memoized per (path, mtime)."""
+    job plus the shared documents row count, both table_stats."""
     from firmable_aus_etl_spark.functions.similarity import normalize_name
     from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
 
-    key = _tfidf_cache_key(sf_dir)
-    if key not in _TFIDF_ROUTE_CACHE:
-        with _sizing_job("tfidf_route_mass"):
-            docs = load_table(spark, sf_dir, "documents")
-            postings = (
-                ensure_parallelism(docs, "doc_id")
-                .select(
-                    "doc_id", "source", "lang",
-                    F.explode(
-                        F.array_distinct(
-                            F.split(normalize_name(F.col("text")), " ")
-                        )
-                    ).alias("s"),
-                )
+    def cand_mass() -> int:
+        docs = load_table(spark, sf_dir, "documents")
+        postings = (
+            ensure_parallelism(docs, "doc_id")
+            .select(
+                "doc_id", "source", "lang",
+                F.explode(
+                    F.array_distinct(
+                        F.split(normalize_name(F.col("text")), " ")
+                    )
+                ).alias("s"),
             )
-            dfq = postings.groupBy("source", "lang", "s").agg(
-                F.count("*").alias("df")
-            )
-            cand = dfq.agg(
-                F.sum(F.col("df") * (F.col("df") - 1) / 2).cast("long").alias("c")
-            ).collect()[0]["c"]
-            _TFIDF_ROUTE_CACHE[key] = {
-                "n_docs": docs.count(),
-                "cand_mass": int(cand or 0),
-            }
-    return _TFIDF_ROUTE_CACHE[key]
+        )
+        dfq = postings.groupBy("source", "lang", "s").agg(
+            F.count("*").alias("df")
+        )
+        cand = dfq.agg(
+            F.sum(F.col("df") * (F.col("df") - 1) / 2).cast("long").alias("c")
+        ).collect()[0]["c"]
+        return int(cand or 0)
+
+    return {
+        "n_docs": table_stat(
+            sf_dir, "documents", "rows",
+            lambda: load_table(spark, sf_dir, "documents").count(),
+        ),
+        "cand_mass": table_stat(sf_dir, "documents", "tfidf_cand_mass", cand_mass),
+    }
 
 
 def _tfidf_routed_oracle() -> str:
@@ -2122,7 +2060,10 @@ def _embedding_ann_cosine_top1(
     portable."""
     from firmable_aus_etl_spark.functions import vectors as V
 
-    n_docs = _docs_count(spark, sf_dir)
+    n_docs = table_stat(
+        sf_dir, "documents", "rows",
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
     wt = _tfidf_portable_weight_frame(spark, sf_dir)
     sign = F.shiftright(F.col("t"), 6).bitwiseAND(F.lit(1)) * 2 - F.lit(1)
     fh = wt.groupBy(
@@ -2414,22 +2355,6 @@ def q_hll_distinct_bigrams_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     return est.join(exact, "source")
 
 
-_BLOOM_EVAL_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _bloom_eval_count(spark: SparkSession, sf_dir: str, eval_g) -> int:
-    """Memoized distinct eval-gram count per (path, mtime) — the one
-    input of the bloom sizing rule (the _docs_count pattern: planner
-    statistics, reusable across repeated plannings, invalidated when
-    the files change; min-of-N bench timings exclude it after the
-    first run — disclosed methodology)."""
-    key = _tfidf_cache_key(sf_dir)
-    if key not in _BLOOM_EVAL_COUNT_CACHE:
-        with _sizing_job("bloom_eval_count"):
-            _BLOOM_EVAL_COUNT_CACHE[key] = eval_g.count()
-    return _BLOOM_EVAL_COUNT_CACHE[key]
-
-
 def _bloom_decon_oracle() -> str:
     from firmable_aus_etl_spark.operators.bloomfilter import (
         auto_bloom_hex_case_sql,
@@ -2540,7 +2465,9 @@ def q_bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFra
         .select("doc_id", "g")
         .distinct()
     )
-    hp = auto_bloom_hex(_bloom_eval_count(spark, sf_dir, eval_g))
+    hp = auto_bloom_hex(
+        table_stat(sf_dir, "documents", "bloom_eval_grams", eval_g.count)
+    )
     positions = bloom_build(eval_g, "g", hex_per_pos=hp)
     pos_g = bloom_contains(
         train.select("g").distinct(), "g", positions, hex_per_pos=hp

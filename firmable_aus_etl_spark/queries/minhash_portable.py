@@ -195,7 +195,9 @@ def _sized_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded driver aggregate), size (rows, bands) by the same rule the
     twin's CASE bakes, raise loud past the matrix."""
     docs = load_table(spark, sf_dir, "documents")
-    rows, bands = dedup.oracle_minhash_bands(docs.count())
+    rows, bands = dedup.oracle_minhash_bands(
+        table_stat(sf_dir, "documents", "rows", docs.count)
+    )
     return docs, dedup.verified_near_dup_pairs(
         docs,
         "doc_id",

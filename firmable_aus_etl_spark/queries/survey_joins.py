@@ -335,7 +335,9 @@ def q_minhash_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.9 at the 0.5 design Jaccard by the sizing law, ~1.0 for the
     fixture's high-jaccard planted dups)."""
     docs = load_table(spark, sf_dir, "documents")
-    rows, bands = dedup.auto_minhash_bands(docs.count())
+    rows, bands = dedup.auto_minhash_bands(
+        table_stat(sf_dir, "documents", "rows", docs.count)
+    )
     return dedup.verified_near_dup_pairs(
         docs,
         "doc_id",

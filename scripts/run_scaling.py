@@ -245,15 +245,16 @@ def _tfidf_decisions() -> dict[str, dict]:
     """Dump the memoized adaptive-dispatch decisions taken during this
     run (verdict Next #2b: the routing story must be ON RECORD, not
     asserted) — one entry per sf_dir the tfidf query planned against."""
-    from firmable_aus_etl_spark import queries as Q
+    from firmable_aus_etl_spark.datasets import TABLE_STATS
 
     out = {}
-    for (sf_dir, _mtime), dec in Q._TFIDF_PLAN_CACHE.items():
-        out[sf_dir] = {
-            k: dec[k]
-            for k in ("plan", "est_naive", "est_prefix", "cand_rows", "pair_rows")
-            if k in dec
-        }
+    for (sf_dir, _table, _mtime, stat), (dec, _sec) in TABLE_STATS.items():
+        if stat == "tfidf_plan":
+            out[sf_dir] = {
+                k: dec[k]
+                for k in ("plan", "est_naive", "est_prefix", "cand_rows", "pair_rows")
+                if k in dec
+            }
     return out
 
 

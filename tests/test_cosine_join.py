@@ -547,25 +547,22 @@ def test_auto_simhash_bands_sizing_rule():
     assert auto_simhash_bands(10**7)[0] <= SIMHASH_ORACLE_MAX_WIDTH - 1
 
 
-def test_simhash_query_raises_loud_past_oracle_matrix(spark):
+def test_simhash_query_raises_loud_past_oracle_matrix(
+    spark, tmp_path, monkeypatch
+):
     """Past the baked CASE matrix the registered query must RAISE, not
     clamp — a silent clamp is the exact cliff class round 8 measured
     (max_planes 12 -> 287.7 s at syn10)."""
     import pytest
 
     from firmable_aus_etl_spark import queries as Q
+    from firmable_aus_etl_spark.queries import llm_text
 
-    key = Q._tfidf_cache_key("/root/testdata/sf0.001")
-    old = Q._DOCS_COUNT_CACHE.get(key)
-    Q._DOCS_COUNT_CACHE[key] = 16 * 2**30  # past the 2^24 matrix
-    try:
-        with pytest.raises(RuntimeError, match="exceeds the"):
-            Q.q_tfidf_cosine_simhash_top1(spark, "/root/testdata/sf0.001")
-    finally:
-        if old is None:
-            Q._DOCS_COUNT_CACHE.pop(key, None)
-        else:
-            Q._DOCS_COUNT_CACHE[key] = old
+    sf_dir = _write_docs(tmp_path, [(1, "acme steel", "en", "web")])
+    # the injected documents row count is past the 2^24 matrix
+    monkeypatch.setattr(llm_text, "table_stat", lambda *a: 16 * 2**30)
+    with pytest.raises(RuntimeError, match="exceeds the"):
+        Q.q_tfidf_cosine_simhash_top1(spark, sf_dir)
 
 
 def test_simhash_banding_recall_on_planted_near_dups(spark):
