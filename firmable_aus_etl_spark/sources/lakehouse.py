@@ -321,8 +321,12 @@ def merge_into_partitioned_snapshot(
     current home, and linking that home forward untouched would leave
     TWO rows for one key. To keep the whole-table-merge equivalence,
     the affected set is widened with every partition currently holding
-    an update key — found by one broadcast semi-join over a
-    column-pruned (keys + partition) scan of the current snapshot.
+    an update key — found by a probe (broadcast semi-join of the update
+    keys over a column-pruned keys + partition scan of the current
+    snapshot) that runs once, inside the affected-partition collect.
+    The collected values keep their column type, and the existing side
+    is read through a literal ``isin`` filter on them: static partition
+    pruning of the scan, with no second probe inside the merge plan.
     That probe pass is skipped entirely when ``partition_col`` is one
     of ``keys`` (the partition value is then part of the key's
     identity and cannot move), which keeps the merge cost strictly
@@ -342,7 +346,7 @@ def merge_into_partitioned_snapshot(
     the whole cycle on conflict, SnapshotConflict after
     ``max_retries``."""
     # NULL partition values would silently bypass the affected-partition
-    # machinery (the semi-join and the collected list both drop NULLs):
+    # machinery (the collected list and the isin filter both drop NULLs):
     # the merged row lands in the default-partition dir while the old
     # default-partition dir is ALSO carried forward — two rows per key.
     # Reject explicitly, mirroring _partition_dirname's unsafe-value raise.
@@ -418,16 +422,13 @@ def _merge_partitioned_claimed(
     aff_union = affected_frames[0]
     for fr in affected_frames[1:]:
         aff_union = aff_union.unionByName(fr)
-    affected = sorted(
-        str(r[0]) for r in aff_union.distinct().collect() if r[0] is not None
-    )
+    # typed values, collected once: the literal filter below prunes the
+    # scan to the affected partitions without re-running the probe
+    values = [r[0] for r in aff_union.distinct().collect() if r[0] is not None]
+    affected = sorted(str(v) for v in values)
     for v in affected:
         _partition_dirname(partition_col, v)  # validate early
-    ex_aff = existing.join(
-        F.broadcast(aff_union.distinct()),
-        partition_col,
-        "left_semi",
-    )
+    ex_aff = existing.filter(F.col(partition_col).isin(values))
     merged = merge_upsert(
         ex_aff.select(*updates.columns),
         updates,
@@ -437,7 +438,6 @@ def _merge_partitioned_claimed(
     )
     if delete_where is not None:
         merged = merged.filter(~delete_where)
-    merged = merged.localCheckpoint()
 
     dst_dir = _snapshot_dir(root, nxt)
     if os.path.exists(dst_dir):

@@ -90,7 +90,6 @@ def _verified_drops(
     """doc_ids from new_sigs with a verified near-dup among seen_sigs
     (any smaller id) or earlier new docs — the pair-min drop set."""
     cand_pool = seen_sigs.unionByName(new_sigs)
-    new_ids = new_sigs.select("doc_id").distinct()
     cand = (
         new_sigs.alias("n")
         .join(
@@ -107,10 +106,13 @@ def _verified_drops(
         )
         .distinct()
     )
-    ha = cand_pool.select("doc_id", "__h").distinct().select(
+    # one row per doc: every doc has exactly one band-0 row carrying its
+    # __h (posexplode of a fixed BANDS-wide array) — a distinct over
+    # (doc_id, __h) would hash-aggregate every shingle-hash array
+    ha = cand_pool.filter(F.col("band") == 0).select(
         F.col("doc_id").alias("a_id"), F.col("__h").alias("__h_a")
     )
-    hb = new_sigs.select("doc_id", "__h").distinct().select(
+    hb = new_sigs.filter(F.col("band") == 0).select(
         F.col("doc_id").alias("b_id"), F.col("__h").alias("__h_b")
     )
     inter = F.size(F.array_intersect(F.col("__h_a"), F.col("__h_b"))).cast("double")
@@ -121,9 +123,56 @@ def _verified_drops(
         .withColumn("j", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
         .filter(F.col("j") >= threshold)
     )
-    return new_ids.join(
-        verified.select(F.col("b_id").alias("doc_id")).distinct(), "doc_id", "left_semi"
-    )
+    # every b_id is a new_sigs doc: no filter back onto the batch needed
+    return verified.select(F.col("b_id").alias("doc_id")).distinct()
+
+
+def _next_batch_id(corpus_path: str) -> int:
+    """Next free batch id, from the COMMITTED corpus dirs: the corpus
+    write is the last write of an ingest, so a signature dir without
+    its corpus dir is an orphan of a crashed ingest and its id is
+    reused (overwritten) by the next call."""
+    committed = _batch_dirs(corpus_path)
+    return committed[-1][0] + 1 if committed else 0
+
+
+def _stage_signatures(
+    spark: SparkSession, sigs: DataFrame, sig_path: str, batch_id: int
+) -> tuple[DataFrame, DataFrame]:
+    """Write the batch's signatures to ``sig_path/batch=N`` (overwrite)
+    and read them back, so the signature map runs once for the write
+    and every branch of the verify plan. Returns (new_sigs, seen_sigs):
+    seen_sigs is every OTHER batch dir, so a replay never matches its
+    own earlier write."""
+    history_dirs = [d for i, d in _batch_dirs(sig_path) if i != batch_id]
+    sig_dir = os.path.join(sig_path, f"batch={batch_id}")
+    sigs.write.mode("overwrite").parquet(sig_dir)
+    new_sigs = spark.read.parquet(sig_dir)
+    if history_dirs:
+        seen_sigs = spark.read.parquet(*history_dirs)
+    else:
+        seen_sigs = spark.createDataFrame([], new_sigs.schema)
+    return new_sigs, seen_sigs
+
+
+def _commit_survivors(
+    spark: SparkSession,
+    batch: DataFrame,
+    id_col: str,
+    drops: DataFrame,
+    corpus_dir: str,
+) -> tuple[int, int]:
+    """Run the drop plan once: collect the dropped ids (bounded by the
+    batch size), left-anti the batch against them as a local relation
+    — so the survivor write re-derives nothing — and write the
+    survivors to ``corpus_dir``, the ingest's commit. Left-anti, not
+    ``~isin``: null-id rows survive, as they match no dropped id.
+    Returns (batch rows, dropped rows)."""
+    ids = [tuple(r) for r in drops.collect()]
+    dropped = spark.createDataFrame(ids, batch.select(id_col).schema)
+    survivors = batch.join(dropped, id_col, "left_anti")
+    survivors.write.mode("overwrite").parquet(corpus_dir)
+    return batch.count(), len(ids)
 
 
 def ingest_increment(
@@ -141,41 +190,35 @@ def ingest_increment(
     surviving rows). Returns counts. Callable directly (tests, batch
     backfills) or from foreachBatch (ingest_stream).
 
+    Write order: the batch's signatures go to ``sig_store/batch=N``
+    first and are read back for the candidate join and verification
+    (the shingle/MinHash map runs once); the surviving rows go to
+    ``corpus/batch=N`` last — that write is the commit.
+
     Replay idempotence: each batch writes its survivors/signatures into
     its own ``batch=N`` subdirectory with mode overwrite, and the
     history read EXCLUDES that subdirectory — so a micro-batch retried
     after a completed or partial write (at-least-once foreachBatch
     replay, before checkpoint commit) re-derives the same state instead
     of appending duplicates. Direct callers may omit ``batch_id``; the
-    next free id is assigned."""
+    next id after the newest committed ``corpus/batch=N`` is assigned,
+    so a call after a crash between the two writes reuses (overwrites)
+    the orphan ``sig_store/batch=N``."""
     sig_path = os.path.join(state_dir, "sig_store")
     corpus_path = os.path.join(state_dir, "corpus")
 
-    existing = _batch_dirs(sig_path)
     if batch_id is None:
-        batch_id = existing[-1][0] + 1 if existing else 0
-    history_dirs = [d for i, d in existing if i != batch_id]
-
-    new_sigs = _signature_frame(batch, id_col, text_col)
-    if history_dirs:
-        seen_sigs = spark.read.parquet(*history_dirs)
-    else:
-        seen_sigs = spark.createDataFrame([], new_sigs.schema)
+        batch_id = _next_batch_id(corpus_path)
+    # every seen doc's signature is remembered, survivor or not
+    new_sigs, seen_sigs = _stage_signatures(
+        spark, _signature_frame(batch, id_col, text_col), sig_path, batch_id
+    )
 
     drops = _verified_drops(new_sigs, seen_sigs, threshold)
-    n_dropped = drops.count()
-    survivors = batch.join(
-        drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
+    n_batch, n_dropped = _commit_survivors(
+        spark, batch, id_col, drops,
+        os.path.join(corpus_path, f"batch={batch_id}"),
     )
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(corpus_path, f"batch={batch_id}")
-    )
-    # every seen doc's signature is remembered, survivor or not
-    new_sigs.write.mode("overwrite").parquet(
-        os.path.join(sig_path, f"batch={batch_id}")
-    )
-
-    n_batch = batch.count()
     return {
         "batch_docs": n_batch,
         "dropped": n_dropped,
@@ -374,7 +417,9 @@ def ingest_embeddings_increment(
     (vec_id, v, tbl, sig) for all seen vectors; ``vectors/batch=N``
     keeps surviving input rows. Each batch overwrites its own
     ``batch=N`` subdirs and the history read excludes them — replay
-    idempotent under foreachBatch's at-least-once semantics.
+    idempotent under foreachBatch's at-least-once semantics. Same
+    write order (signatures first, ``vectors/batch=N`` last as the
+    commit) and auto-``batch_id`` rule as ingest_increment.
 
     Scale: the new x history candidate join is an equi-join on
     (tbl, sig) buckets — history is never all-pairs scanned; exact
@@ -385,19 +430,14 @@ def ingest_embeddings_increment(
     sig_path = os.path.join(state_dir, "vec_sigs")
     corpus_path = os.path.join(state_dir, "vectors")
 
-    existing = _batch_dirs(sig_path)
     if batch_id is None:
-        batch_id = existing[-1][0] + 1 if existing else 0
-    history_dirs = [d for i, d in existing if i != batch_id]
-
-    new_sigs = _vector_signature_frame(
+        batch_id = _next_batch_id(corpus_path)
+    # every seen vector's signature is remembered, survivor or not
+    sigs = _vector_signature_frame(
         batch, id_col, vec_col,
         dim=dim, n_planes=n_planes, n_tables=n_tables, seed=seed,
     )
-    if history_dirs:
-        seen_sigs = spark.read.parquet(*history_dirs)
-    else:
-        seen_sigs = spark.createDataFrame([], new_sigs.schema)
+    new_sigs, seen_sigs = _stage_signatures(spark, sigs, sig_path, batch_id)
 
     pool = seen_sigs.unionByName(new_sigs)
     cand = (
@@ -421,20 +461,13 @@ def ingest_embeddings_increment(
     drops = (
         cand.withColumn("cosine", cosine(F.col("va"), F.col("vb")))
         .filter(F.col("cosine") >= threshold)
-        .select(F.col("b_id").alias(id_col))
+        .select("b_id")
         .distinct()
     )
-    survivors = batch.join(drops, id_col, "left_anti")
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(corpus_path, f"batch={batch_id}")
+    n_batch, n_dropped = _commit_survivors(
+        spark, batch, id_col, drops,
+        os.path.join(corpus_path, f"batch={batch_id}"),
     )
-    # every seen vector's signature is remembered, survivor or not
-    new_sigs.write.mode("overwrite").parquet(
-        os.path.join(sig_path, f"batch={batch_id}")
-    )
-
-    n_batch = batch.count()
-    n_dropped = n_batch - survivors.count()
     return {
         "batch_vecs": n_batch,
         "dropped": n_dropped,

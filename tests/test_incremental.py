@@ -137,6 +137,53 @@ def test_ingest_replay_is_idempotent(spark, corpus, tmp_path):
     assert read_corpus(spark, state).count() == len(got)
 
 
+def test_ingest_crash_between_writes_replays_clean(spark, corpus, tmp_path):
+    """The corpus write is the commit: after a crash between the
+    signature write and the corpus write of batch 1, both a replay with
+    batch_id=1 and a direct call with batch_id=None re-ingest it as
+    batch 1 over the orphan signatures, and the corpus equals a clean
+    run."""
+    import os
+    import shutil
+
+    from firmable_aus_etl_spark.streaming.incremental import read_corpus
+
+    batches = _batches(corpus)
+    clean = str(tmp_path / "clean")
+    clean_stats = [
+        ingest_increment(spark, b, clean, threshold=THRESH) for b in batches[:2]
+    ]
+    want = sorted(r.doc_id for r in read_corpus(spark, clean).collect())
+
+    for name, batch_id in (("replay", 1), ("direct", None)):
+        state = str(tmp_path / name)
+        shutil.copytree(clean, state)
+        shutil.rmtree(os.path.join(state, "corpus", "batch=1"))
+        assert os.path.isdir(os.path.join(state, "sig_store", "batch=1"))
+        stats = ingest_increment(
+            spark, batches[1], state, threshold=THRESH, batch_id=batch_id
+        )
+        assert stats == clean_stats[1]
+        got = [r.doc_id for r in read_corpus(spark, state).collect()]
+        assert len(got) == len(set(got))
+        assert sorted(got) == want
+
+
+def test_ingest_leaves_no_persisted_rdd(spark, corpus, tmp_path):
+    """An ingest releases everything it computes: no persisted RDD is
+    left for the ContextCleaner to reclaim later."""
+    state = str(tmp_path / "state")
+    batches = _batches(corpus)
+    ingest_increment(spark, batches[0], state, threshold=THRESH)
+    # compare RDD ids, not map sizes: the context keeps persisted RDDs
+    # as weak values, so a JVM GC during the call can drop entries
+    # that earlier tests left and shrink the map
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    ingest_increment(spark, batches[1], state, threshold=THRESH)
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
+
+
 def test_agg_view_reader_skips_incomplete_version(spark, tmp_path):
     """A vN dir without _SUCCESS (crashed/in-flight write) must not be
     served as the latest view."""

@@ -265,6 +265,69 @@ def test_partitioned_merge_key_in_keys_skips_probe(spark, root):
     ]
 
 
+def test_partitioned_merge_integer_partition_moves_and_new_value(
+    spark, root, tmp_path
+):
+    """Typed partition values: with an INT partition column, a key
+    moving partition and a brand-new partition value still give the
+    whole-table merge, and the untouched partition is carried forward
+    by hard link."""
+    base = spark.createDataFrame(
+        [(1, 202401, 10.0), (2, 202401, 20.0), (3, 202402, 30.0),
+         (4, 202403, 40.0)],
+        "id long, month int, v double",
+    )
+    LH.write_snapshot(base, root, partition_by=["month"])
+    updates = spark.createDataFrame(
+        [(3, 202403, 35.0),   # key 3 moves 202402 -> 202403
+         (5, 202404, 50.0)],  # brand-new partition value
+        "id long, month int, v double",
+    )
+
+    def inodes(version, month):
+        d = os.path.join(root, f"snapshot={version}", f"month={month}")
+        return {
+            f: os.stat(os.path.join(d, f)).st_ino
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+
+    before_01 = inodes(0, 202401)
+    LH.merge_into_partitioned_snapshot(spark, root, updates, ["id"], "month")
+    flat = str(tmp_path / "flat")
+    LH.write_snapshot(base, flat)
+    LH.merge_into_snapshot(spark, flat, updates, ["id"])
+
+    got = LH.read_snapshot(spark, root)
+    assert dict(got.dtypes)["month"] == "int"
+    cols = ["id", "month", "v"]
+    assert rows(got.select(*cols)) == rows(LH.read_snapshot(spark, flat).select(*cols))
+    assert rows(got.select(*cols)) == [
+        (1, 202401, 10.0), (2, 202401, 20.0), (3, 202403, 35.0),
+        (4, 202403, 40.0), (5, 202404, 50.0),
+    ]
+    assert inodes(1, 202401) == before_01
+
+
+def test_partitioned_merge_leaves_no_persisted_rdd(spark, root):
+    """The merge releases everything it computes: no persisted RDD is
+    left for the ContextCleaner to reclaim later."""
+    base = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0)], "id long, part string, v double"
+    )
+    LH.write_snapshot(base, root, partition_by=["part"])
+    updates = spark.createDataFrame(
+        [(2, "a", 3.0), (3, "c", 4.0)], "id long, part string, v double"
+    )
+    # compare RDD ids, not map sizes: the context keeps persisted RDDs
+    # as weak values, so a JVM GC during the call can drop entries
+    # that earlier tests left and shrink the map
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    LH.merge_into_partitioned_snapshot(spark, root, updates, ["id"], "part")
+    assert not set(jsc.getPersistentRDDs().keySet()) - before
+
+
 def test_vacuum_reclaims_crashed_writer_orphans(spark, root):
     """ADVICE r4 (low) + r5 (medium): snapshot dirs with version > the
     committed pointer are orphans of a crashed writer ONLY once they

@@ -578,3 +578,41 @@ def test_registry_has_no_unbounded_windows_or_cartesians(spark):
     assert not flagged, f"unbounded global windows outside allowlist: {flagged}"
     assert not stale, f"allowlist entries no longer flag (remove them): {stale}"
     assert not cartesians, f"CartesianProduct in plans: {cartesians}"
+
+
+def test_incremental_verify_has_no_aggregate_over_hash_arrays(spark, tmp_path):
+    """The ingest verify plan reads each doc's shingle-hash array from
+    its one band-0 signature row; a distinct over (doc_id, __h) would
+    hash-aggregate every history doc's array on every ingest."""
+    import re
+
+    from firmable_aus_etl_spark.streaming.incremental import (
+        _signature_frame,
+        _verified_drops,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox number {i % 3} jumps over the lazy dog")
+         for i in range(6)],
+        "doc_id long, text string",
+    )
+    for name, cond in (("hist", "doc_id < 3"), ("new", "doc_id >= 3")):
+        _signature_frame(docs.filter(cond), "doc_id", "text").write.parquet(
+            str(tmp_path / name)
+        )
+    drops = _verified_drops(
+        spark.read.parquet(str(tmp_path / "new")),
+        spark.read.parquet(str(tmp_path / "hist")),
+        0.5,
+    )
+    plan = plans.physical_plan(drops)
+    agg_keys = [
+        m.group(1)
+        for node in re.split(r"\n(?=\(\d+\) )", plan)
+        if re.match(r"\(\d+\) (?:Hash|ObjectHash|Sort)Aggregate\b", node)
+        for m in [re.search(r"\nKeys \[\d+\]: \[([^\]]*)\]", node)]
+        if m
+    ]
+    assert agg_keys, plan  # the candidate and output distincts remain
+    assert not [k for k in agg_keys if re.search(r"\b__h#", k)], plan
+    assert {r.doc_id for r in drops.collect()} == {3, 4, 5}
