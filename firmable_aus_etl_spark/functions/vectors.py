@@ -6,8 +6,12 @@ search into an equi-join on bucket signatures — the same
 blocking-as-equi-join move as the fuzzy matcher (SURVEY §4 custom work
 #4), applied to vectors.
 
-Everything is pure expressions: F.aggregate/F.zip_with dot products run
-in whole-stage codegen; no Python crossing on any hot path.
+Each operator has one implementation, chosen by a recorded A/B
+(PERF.md decisions 15, 18 and 19): F.aggregate/F.zip_with expression
+folds where the interpreted fold wins (multi-probe plane dots, exact
+per-pair cosines), one Arrow-batched numpy matmul per batch
+(mapInPandas) for sign-LSH signatures, centroid assignment and the
+within-cell gram-matrix verify.
 """
 
 from __future__ import annotations
@@ -591,7 +595,6 @@ def lsh_multiprobe_topk(
     n_tables: int = 6,
     probes: int = 10,
     seed: int = 42,
-    impl: str = "expr",
 ) -> DataFrame:
     """Query-directed multi-probe sign-LSH top-k (round-3 verdict item
     #2 — single-bucket probing measured recall 0.35 on the near-uniform
@@ -623,18 +626,14 @@ def lsh_multiprobe_topk(
     Deterministic end to end: flip costs add in fixed (a<b) order and
     probe ranking breaks cost ties by probe signature — so the DuckDB
     oracle re-derives the identical probe lists and candidate set.
-    ``impl="expr"`` (default) keeps everything JVM-side; the heavy
-    expression trees are built as parsed SQL strings because py4j
-    CONSTRUCTION cost, not execution, dominated the first version
-    (measured at sf0.1: ~4 s of driver time building ~2.7k Column
-    objects per run -> 0.6 s via F.expr; end-to-end 4.4 s -> 2.2 s).
-    ``impl="arrow"`` computes the plane dots as one numpy matmul per
-    Arrow batch — A/B-slower here (2.4 s vs 1.3 s exec: Python worker
-    + double Arrow vector transfer outweigh the interpreted fold at
-    thousands of rows) but the right choice when rows x planes grows
-    another order of magnitude; its pairwise summation flips a
-    signature bit or reorders two flip costs only at |dot| ~ 1e-13
-    (same trade as _plane_sigs_arrow).
+    Everything stays JVM-side; the heavy expression trees are built as
+    parsed SQL strings because py4j CONSTRUCTION cost, not execution,
+    dominated the first version (measured at sf0.1: ~4 s of driver
+    time building ~2.7k Column objects per run -> 0.6 s via F.expr;
+    end-to-end 4.4 s -> 2.2 s). The plane dots stay an expression fold:
+    an Arrow-batched numpy matmul A/B-measured slower here (2.4 s vs
+    1.3 s exec — Python worker + double Arrow vector transfer outweigh
+    the interpreted fold at thousands of rows; PERF.md decision 18).
     """
     tables = [
         make_planes(dim, n_planes, seed=seed + 1000 * t) for t in range(n_tables)
@@ -672,19 +671,12 @@ def lsh_multiprobe_topk(
             f" * CAST(pow(2.0D, i) AS BIGINT))"
         )
 
-    flat = [[float(x) for x in p] for planes in tables for p in planes]
-
     # ---- corpus: one signature row per (vec, table) — computed once,
     # shuffled once; the probe budget never touches this side.
-    if impl == "arrow":
-        c0 = _plane_dots_arrow(
-            corpus, planes_flat=flat, id_col=corpus_id, vec_col=vec_col
-        ).select(F.col("__id").alias("neighbor_id"), "__dots")
-    else:
-        c0 = ensure_parallelism(corpus, corpus_id).select(
-            F.col(corpus_id).alias("neighbor_id"),
-            dots_col().alias("__dots"),
-        )
+    c0 = ensure_parallelism(corpus, corpus_id).select(
+        F.col(corpus_id).alias("neighbor_id"),
+        dots_col().alias("__dots"),
+    )
     cs = c0.select(
         "neighbor_id",
         F.posexplode(F.array(*[table_sig(t) for t in range(n_tables)])).alias(
@@ -696,15 +688,10 @@ def lsh_multiprobe_topk(
     # (the flip-cost expressions below reference them ~30x per table;
     # duplicated aggregate subtrees run interpreted — the repo-wide
     # codegen-overflow rule).
-    if impl == "arrow":
-        q0 = _plane_dots_arrow(
-            queries, planes_flat=flat, id_col=query_id, vec_col=vec_col
-        ).select(F.col("__id").alias("query_id"), "__dots")
-    else:
-        q0 = ensure_parallelism(queries, query_id).select(
-            F.col(query_id).alias("query_id"),
-            dots_col().alias("__dots"),
-        )
+    q0 = ensure_parallelism(queries, query_id).select(
+        F.col(query_id).alias("query_id"),
+        dots_col().alias("__dots"),
+    )
     q1 = q0.select(
         "query_id",
         "__dots",
@@ -782,51 +769,6 @@ def lsh_multiprobe_topk(
     ).drop("__qv", "__cv", "__qn", "__cn")
 
 
-def _plane_dots_arrow(
-    df: DataFrame,
-    *,
-    planes_flat: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """All plane dot products via one Arrow-batched numpy matmul —
-    (__id, __v, __dots array<double>[n_tables*n_planes]). The
-    multi-probe query side needs the raw dots (flip costs), not just
-    their signs, so this is the dots-preserving sibling of
-    _plane_sigs_arrow with the same value-parity reasoning: numpy
-    pairwise summation differs from the sequential fold only at
-    ~1e-16 relative, which flips a sign (or reorders two flip costs)
-    only at |dot| ~ 1e-13 — vanishing for continuous embeddings."""
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("__id", df.schema[id_col].dataType, True),
-            StructField("__v", df.schema[vec_col].dataType, True),
-            StructField("__dots", ArrayType(DoubleType()), True),
-        ]
-    )
-    src = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        pm = np.array(planes_flat, dtype=np.float64)  # (T*P, dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-            dots = v @ pm.T
-            yield pd.DataFrame(
-                {"__id": pdf["__id"], "__v": pdf["__v"], "__dots": list(dots)}
-            )
-
-    from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
-
-    return ensure_parallelism(src, "__id").mapInPandas(fn, out_schema)
-
-
 def _plane_sigs_arrow(
     df: DataFrame,
     *,
@@ -889,18 +831,19 @@ def assign_cells_arrow(
     vec_col: str,
 ) -> DataFrame:
     """Nearest-centroid assignment via one Arrow-batched numpy matmul:
-    (__id, cell) with cell = argmax dot, ties to the LOWEST cell id
-    (np.argmax takes the first maximum — same tie rule as the
-    max(struct(d, -cell)) expression and the SQL twin's ORDER BY d
-    DESC, cell). Replaces the posexplode+join+groupBy assignment's
-    N*k*d-row shuffle with a map-side pass; the centroid matrix rides
-    the closure (k x dim literals — model state, the thing that should
-    broadcast)."""
+    (__id, __v, cell) with cell = argmax dot, ties to the LOWEST cell
+    id (np.argmax takes the first maximum — same tie rule as
+    ivf_assign's stable (-dot, cell) sort and the SQL twin's ORDER BY
+    d DESC, cell). A map-side pass with no assignment shuffle; the
+    vector rides along so a cell-grouped consumer needs no join back
+    to the corpus. The centroid matrix rides the closure (k x dim
+    literals — model state, the thing that should broadcast)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     out_schema = StructType(
         [
             StructField("__id", df.schema[id_col].dataType, True),
+            StructField("__v", df.schema[vec_col].dataType, True),
             StructField("cell", IntegerType(), True),
         ]
     )
@@ -908,15 +851,13 @@ def assign_cells_arrow(
 
     def fn(batches):
         import numpy as np
-        import pandas as pd
 
         cm = np.array(centroids, dtype=np.float64)  # (k, dim)
         for pdf in batches:
             if not len(pdf):
                 continue
             v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-            cells = np.argmax(v @ cm.T, axis=1).astype(np.int32)
-            yield pd.DataFrame({"__id": pdf["__id"], "cell": cells})
+            yield pdf.assign(cell=np.argmax(v @ cm.T, axis=1).astype(np.int32))
 
     from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
 
@@ -932,7 +873,6 @@ def lsh_signature_frame(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 42,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-table sign-LSH signatures: one row per (vector, table) with
     columns ``(__id, __v, __tbl, __sig)``. The hyperplanes are seeded
@@ -940,58 +880,27 @@ def lsh_signature_frame(
     shared candidate-keying primitive for the near-dup join and the
     incremental vector-ingest signature store.
 
-    ``impl="arrow"`` (default) computes all n_tables*n_planes dot
-    products as one numpy matmul per Arrow batch; ``impl="expr"`` is
-    the pure-expression twin (one flat literal plane matrix, a single
-    transform — see lsh_topk), value-parity-tested, kept for
-    plans that must stay Python-free."""
+    All n_tables*n_planes dot products run as one numpy matmul per
+    Arrow batch (_plane_sigs_arrow; A/B 4.3 s -> 1.5 s against the
+    expression fold, PERF.md decision 15). Table t's signature equals
+    ``hyperplane_signature(vec, make_planes(dim, n_planes,
+    seed=seed + 1000*t))`` (parity-tested)."""
     tables = [
         make_planes(dim, n_planes, seed=seed + 1000 * t) for t in range(n_tables)
     ]
     flat = [[float(x) for x in p] for planes in tables for p in planes]
-    if impl == "arrow":
-        sigs = _plane_sigs_arrow(
-            df,
-            planes_flat=flat,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        return sigs.select(
-            "__id",
-            "__v",
-            F.posexplode("__sigs").alias("__tbl", "__sig"),
-        )
-    all_planes = F.lit(flat)
-    dotted = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        F.transform(
-            all_planes,
-            lambda p: F.aggregate(
-                F.zip_with(F.col(vec_col), p, lambda a, b: a.cast("double") * b),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        ).alias("__dots"),
+    sigs = _plane_sigs_arrow(
+        df,
+        planes_flat=flat,
+        n_planes=n_planes,
+        n_tables=n_tables,
+        id_col=id_col,
+        vec_col=vec_col,
     )
-
-    def table_sig(t: int):
-        def step(acc, i):
-            bit = (F.element_at(F.col("__dots"), i + 1 + t * n_planes) >= 0).cast("long")
-            return acc + bit * F.pow(F.lit(2.0), i).cast("long")
-
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)), F.lit(0).cast("long"), step
-        )
-
-    return dotted.select(
+    return sigs.select(
         "__id",
         "__v",
-        F.posexplode(F.array(*[table_sig(t) for t in range(n_tables)])).alias(
-            "__tbl", "__sig"
-        ),
+        F.posexplode("__sigs").alias("__tbl", "__sig"),
     )
 
 
@@ -1005,7 +914,6 @@ def cosine_near_dup_pairs(
     n_planes: int = 8,
     n_tables: int = 4,
     seed: int = 42,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: sign-LSH banded candidate
     generation (a pair is a candidate iff its signatures collide in ANY
@@ -1023,25 +931,34 @@ def cosine_near_dup_pairs(
     bucket-colliding candidates. Recall at a given threshold grows with
     ``n_tables`` (for near-identical vectors a single table already
     catches ~all pairs).
+
+    A zero vector is never anyone's near-duplicate (its cosine is
+    undefined): every zero vector signs to the all-ones bucket, so
+    zero-norm rows leave before the bucket join — the gram-matrix
+    verify and the DuckDB twins score them the same way.
     """
     # localCheckpoint: both self-join sides consume the signature
     # frame — without it the whole signature pass (incl. the Arrow
-    # matmul) re-executes per side (the semantic_dedup_pairs profile
-    # finding). Norms are hoisted to one fold per ROW so the verify
-    # does one dot fold per candidate instead of three aggregates —
-    # bit-identical to cosine() (same fold orders, same two doubles
-    # multiplied).
-    sigs = lsh_signature_frame(
-        corpus, dim=dim, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, n_tables=n_tables, seed=seed, impl=impl,
-    ).localCheckpoint()
+    # matmul) re-executes per side. Norms are hoisted to one fold per
+    # ROW so the verify does one dot fold per candidate instead of
+    # three aggregates — bit-identical to cosine() (same fold orders,
+    # same two doubles multiplied).
+    sigs = (
+        lsh_signature_frame(
+            corpus, dim=dim, id_col=id_col, vec_col=vec_col,
+            n_planes=n_planes, n_tables=n_tables, seed=seed,
+        )
+        .withColumn("__n", l2_norm(F.col("__v")))
+        .where(F.col("__n") > 0)
+        .localCheckpoint()
+    )
     a = sigs.select(
         F.col("__id").alias("a_id"), F.col("__v").alias("__av"),
-        l2_norm(F.col("__v")).alias("__na"), "__tbl", "__sig",
+        F.col("__n").alias("__na"), "__tbl", "__sig",
     )
     b = sigs.select(
         F.col("__id").alias("b_id"), F.col("__v").alias("__bv"),
-        l2_norm(F.col("__v")).alias("__nb"), "__tbl", "__sig",
+        F.col("__n").alias("__nb"), "__tbl", "__sig",
     )
     cand = (
         a.join(b, on=["__tbl", "__sig"])
@@ -1204,8 +1121,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.99,
-    impl: str = "arrow",
-    verify: str = "expr",
 ) -> DataFrame:
     """SemDeDup-style cluster-blocked embedding dedup (Abbas et al.,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -1214,145 +1129,24 @@ def semantic_dedup_pairs(
     threshold. Emits (a_id, b_id, cell, cosine), a_id < b_id.
 
     The alternative blocking strategy to sign-LSH banding
-    (cosine_near_dup_pairs): one equi-join on the cell id instead of
+    (cosine_near_dup_pairs): cell-grouped blocks instead of
     (table, signature) buckets — coarser blocks, no banding overhead,
     and the known SemDeDup recall trade: a near-dup pair straddling a
     cell boundary is missed (by design; raise n_cells for smaller
     cells, or use the LSH path when recall must be provable).
     Deterministic given centroid literals, so fully SQL-expressible.
 
-    ``impl="arrow"`` (default) assigns cells with one numpy matmul per
-    Arrow batch — a map-side pass, no assignment shuffle.
-    ``impl="expr"`` is the all-codegen twin (posexplode + broadcast
-    centroid join + groupBy(id, cell): N*k*d narrow rows through
-    whole-stage codegen — chosen over HOF folds, which run INTERPRETED
-    and measured 77 s at sf0.1, and over unrolled literal terms, which
-    OOM janino). Same argmax tie rule both paths: highest dot, ties to
-    the LOWEST cell id, matching the SQL twin's ORDER BY d DESC, cell
-    (parity-tested).
-
-    ``verify="expr"`` (default) scores each within-cell pair with the
-    sequential dot fold — bit-identical to the SQL oracle, the
-    correctness path. ``verify="arrow"`` is the scale fast path: one
-    applyInPandas per cell computing the normalized GRAM MATRIX
-    (numpy, O(w^2 d) flops at memory bandwidth instead of per-pair
-    interpreted folds). Its cosines differ from the fold only in FP
-    summation order (~1e-16 relative; pair-set parity tested at 9 dp)
-    — keep the expr path wherever bit-stable output is contractual.
-    Cell width w bounds the w x w gram buffer: raise n_cells if cells
+    Two stages, the shape of the registered
+    semantic_dedup_cell_blocked query: ONE mapInPandas assigns cells
+    (assign_cells_arrow — the matmul rides the map side of the
+    groupBy(cell) shuffle), and one applyInPandas per cell scores the
+    normalized GRAM MATRIX (_semantic_verify_arrow). No join, no
+    persisted intermediate. A/B at sf0.1: assignment 3.9 s -> 2.0 s
+    against a posexplode + broadcast-centroid join (PERF.md decision
+    15); the fused path 1.76 s -> 1.1 s against a self-join verify
+    (decision 19). Cosines differ from the sequential dot fold only in
+    FP summation order (~1e-16 relative; parity-tested at 9 dp). Cell
+    width w bounds the w x w gram buffer: raise n_cells if cells
     outgrow executor memory (the standard SemDeDup lever)."""
-    if impl == "arrow" and verify == "arrow":
-        # FUSED scale path (round-3 verdict item #6): ONE mapInPandas
-        # emits (id, vec, cell) — the assignment matmul rides the map
-        # side of the groupBy(cell) shuffle — and the gram-matrix
-        # verify consumes the shuffled cells directly. Eliminates the
-        # cells-by-id join, its localCheckpoint, and the per-row norm
-        # fold of the self-join path entirely: 2 stages total
-        # (assign-map -> cell-grouped verify). A/B at sf0.1:
-        # 1.76 s -> ~1.1 s isolated.
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        out_schema = StructType(
-            [
-                StructField("__id", corpus.schema[id_col].dataType, True),
-                StructField("__v", corpus.schema[vec_col].dataType, True),
-                StructField("cell", IntegerType(), True),
-            ]
-        )
-        src = corpus.select(
-            F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-        )
-
-        def assign(batches):
-            import numpy as np
-            import pandas as pd
-
-            cm = np.array(centroids, dtype=np.float64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-                pdf = pdf.assign(cell=np.argmax(v @ cm.T, axis=1).astype(np.int32))
-                yield pdf
-
-        from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
-
-        assigned = ensure_parallelism(src, "__id").mapInPandas(assign, out_schema)
-        return _semantic_verify_arrow(assigned, threshold)
-    if impl == "arrow":
-        cells = assign_cells_arrow(
-            corpus, centroids, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        spark = corpus.sparkSession
-        cent_pos = spark.createDataFrame(
-            [
-                (i, pos, float(x))
-                for i, c in enumerate(centroids)
-                for pos, x in enumerate(c)
-            ],
-            "cell int, pos int, cval double",
-        )
-        vpos = corpus.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(F.transform(vec_col, lambda x: x.cast("double"))).alias(
-                "pos", "val"
-            ),
-        )
-        dots = (
-            vpos.join(F.broadcast(cent_pos), "pos")
-            .groupBy("__id", "cell")
-            .agg(F.sum(F.col("val") * F.col("cval")).alias("d"))
-        )
-        best = dots.groupBy("__id").agg(
-            F.max(F.struct(F.col("d").alias("d"), (-F.col("cell")).alias("nc"))).alias("m")
-        )
-        cells = best.select("__id", (-F.col("m.nc")).cast("int").alias("cell"))
-    # hoist each vector's L2 norm to ONE fold per ROW before the
-    # self-join: the verify would otherwise re-fold both norms for
-    # every pair (3 interpreted aggregates per pair -> 1), an
-    # O(cell_width) redundancy per vector. Bit-identical to
-    # cosine(): same fold order per norm, same two doubles multiplied.
-    # localCheckpoint: BOTH sides of the self-join consume `assigned`,
-    # and without it the full upstream pipeline (per-row transforms +
-    # the Arrow assignment pass) re-executes once per side — profiled
-    # as ~3x the executor time of the verify itself. Same move as
-    # connected_components' edge materialization; rows are (id, vec,
-    # norm, cell) — N x dim, far smaller than any pair frame.
-    assigned = (
-        corpus.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            l2_norm(F.col(vec_col)).alias("__n"),
-        )
-        .join(cells, "__id")
-        .localCheckpoint()
-    )
-    a = assigned.select(
-        F.col("__id").alias("a_id"), F.col("__v").alias("__av"),
-        F.col("__n").alias("__na"), "cell",
-    )
-    b = assigned.select(
-        F.col("__id").alias("b_id"), F.col("__v").alias("__bv"),
-        F.col("__n").alias("__nb"), "cell",
-    )
-    if verify == "arrow":
-        return _semantic_verify_arrow(assigned, threshold)
-    # the verify is CPU-bound (a dot fold per pair), but its input
-    # BYTES are small, so AQE's size-based coalescing squeezes it onto
-    # a couple of tasks — pin cell-hash partitioning at the session's
-    # shuffle width so every core verifies (an unrolled codegen dot
-    # was A/B-measured SLOWER than the fold: 4.7 s vs 2.6 s — the
-    # per-element array accessors lose to one pass over the array)
-    n_shuffle = int(a.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        a.repartition(n_shuffle, "cell")
-        .join(b, on=["cell"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "cosine",
-            dot(F.col("__av"), F.col("__bv")) / (F.col("__na") * F.col("__nb")),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("a_id", "b_id", "cell", "cosine")
-    )
+    assigned = assign_cells_arrow(corpus, centroids, id_col=id_col, vec_col=vec_col)
+    return _semantic_verify_arrow(assigned, threshold)

@@ -226,8 +226,11 @@ def minhash_signatures_arrow(
     vectorized instead of interpreted. a < p < 2^31 and h < 2^31 keep
     a*h + b < 2^62: no int64 overflow, same as the ANSI-safe
     expression. Appears in plans as MapInPandas (the sanctioned
-    Arrow-batched escape hatch), never BatchEvalPython; the
-    pure-expression twin stays available via impl="expr".
+    Arrow-batched escape hatch), never BatchEvalPython. It is the one
+    signature kernel of the MinHash banding pipelines (A/B 4.6 s ->
+    2.3 s warm at sf0.1 against the expression fold, PERF.md decision
+    16); the expression form stays the per-row column function for
+    the streaming ingests and the tpch_depth queries.
 
     ``portable=True`` switches the JVM-side base hash to md5
     (md5_base_hash) — the fold is base-agnostic, so the output stays
@@ -304,7 +307,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     portable: bool = False,
-    impl: str | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding.
 
@@ -323,7 +325,7 @@ def minhash_lsh_pairs(
     """
     sh = shingle_frame(df, id_col, text_col, shingle_n=shingle_n)
     return minhash_lsh_pairs_from_shingles(
-        sh, num_hashes=num_hashes, bands=bands, portable=portable, impl=impl
+        sh, num_hashes=num_hashes, bands=bands, portable=portable
     )
 
 
@@ -367,37 +369,19 @@ def minhash_lsh_pairs_from_shingles(
     num_hashes: int = 32,
     bands: int = 8,
     portable: bool = False,
-    impl: str | None = None,
 ) -> DataFrame:
     """Banding + bucket join over a prepared (__id, __sh) frame.
 
-    ``impl="arrow"`` computes the signature stage via numpy
-    (minhash_signatures_arrow, bit-identical values — parity-tested,
-    for BOTH base hashes: the md5/xxhash base is JVM-side either way;
-    only the Carter-Wegman fold moves to numpy). Default (None)
-    auto-selects arrow (measured 2x warm at sf0.1 for the fast path,
-    PERF decision 16; the portable path gains more — its auto-sized
-    num_hashes grows ~n^0.5 and the interpreted-HOF fold pays per
-    element where numpy pays per batch).
+    Signatures come from minhash_signatures_arrow for BOTH base hashes
+    (the md5/xxhash base is JVM-side either way; only the Carter-Wegman
+    fold runs in numpy, bit-identical to minhash_signature_from —
+    parity-tested). Measured 2x warm at sf0.1 for the fast path (PERF
+    decision 16); the portable path gains more — its auto-sized
+    num_hashes grows ~n^0.5 and an interpreted-HOF fold pays per
+    element where numpy pays per batch.
     """
-    if impl is None:
-        impl = "arrow"
     rows_per_band = num_hashes // bands
-    if impl == "arrow":
-        sig = minhash_signatures_arrow(
-            sh, num_hashes=num_hashes, portable=portable
-        )
-    else:
-        # Projection boundaries: shingle array computed once, signature
-        # computed once — Catalyst keeps the boundaries because the lower
-        # outputs are expensive and referenced many times (CollapseProject
-        # cost rule), so neither subtree is duplicated per band.
-        sig = sh.select(
-            "__id",
-            minhash_signature_from(
-                F.col("__sh"), num_hashes=num_hashes, portable=portable
-            ).alias("__sig"),
-        )
+    sig = minhash_signatures_arrow(sh, num_hashes=num_hashes, portable=portable)
 
     def band_key(b: int):
         elems = [F.col("__sig")[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
@@ -698,7 +682,6 @@ def verified_near_dup_pairs(
     num_hashes: int = 32,
     bands: int = 16,
     portable: bool = False,
-    impl: str | None = None,
 ) -> DataFrame:
     """The 100 TB near-dup pipeline: MinHash-LSH candidates -> exact
     n-gram Jaccard verification on candidates only.
@@ -707,15 +690,12 @@ def verified_near_dup_pairs(
     verify O(candidates * doc_len) — vs the exact inverted-index join's
     O(sum_token df_token^2). With 2-row bands, recall for jaccard>=0.5
     is 1-(1-j^2)^bands (~0.99 at j=0.5, ~1.0 at j>=0.8); tune bands up
-    for higher recall at more shuffle.
-
-    ``impl`` as in minhash_lsh_pairs_from_shingles (default
-    auto-selects the bit-identical Arrow/numpy signature kernel for
-    the fast path — same output pairs).
+    for higher recall at more shuffle. Signatures run through the
+    Arrow/numpy kernel of minhash_lsh_pairs_from_shingles.
     """
     sh = shingle_frame(df, id_col, text_col, shingle_n=shingle_n)
     cand = minhash_lsh_pairs_from_shingles(
-        sh, num_hashes=num_hashes, bands=bands, portable=portable, impl=impl
+        sh, num_hashes=num_hashes, bands=bands, portable=portable
     )
     # verify on xxhash64'd shingle sets: the candidate volume is
     # O(colliding pairs) and each verification intersects two ~|s|

@@ -424,8 +424,13 @@ def ingest_embeddings_increment(
     Scale: the new x history candidate join is an equi-join on
     (tbl, sig) buckets — history is never all-pairs scanned; exact
     cosine runs only on bucket-colliding candidates.
+
+    A zero vector is never anyone's near-duplicate: zero-norm rows
+    leave both candidate sides before the bucket join (every zero
+    vector signs to the same bucket), but they are still stored and
+    still survive — the rule cosine_near_dup_pairs applies.
     """
-    from firmable_aus_etl_spark.functions.vectors import cosine
+    from firmable_aus_etl_spark.functions.vectors import cosine, l2_norm
 
     sig_path = os.path.join(state_dir, "vec_sigs")
     corpus_path = os.path.join(state_dir, "vectors")
@@ -439,9 +444,10 @@ def ingest_embeddings_increment(
     )
     new_sigs, seen_sigs = _stage_signatures(spark, sigs, sig_path, batch_id)
 
-    pool = seen_sigs.unionByName(new_sigs)
+    nonzero = l2_norm(F.col("v")) > 0
+    pool = seen_sigs.unionByName(new_sigs).where(nonzero)
     cand = (
-        new_sigs.alias("n")
+        new_sigs.where(nonzero).alias("n")
         .join(
             pool.alias("p"),
             on=[

@@ -438,6 +438,31 @@ def test_embedding_near_dups_bucket_join_no_cartesian(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_semantic_dedup_pairs_has_registered_query_shape(spark):
+    """The public cluster-blocked dedup runs the measured winner: the
+    registered semantic_dedup_cell_blocked shape — one Arrow assignment
+    map feeding one cell-grouped gram-matrix verify, with no join."""
+    import re
+
+    from firmable_aus_etl_spark.datasets import load_table
+    from firmable_aus_etl_spark.functions import vectors as V
+
+    def shape(df):
+        plan = plans.physical_plan(df)
+        return tuple(
+            len(re.findall(rf"\(\d+\) {op}\b", plan))
+            for op in ("MapInPandas", "FlatMapGroupsInPandas",
+                       "SortMergeJoin", "BroadcastHashJoin")
+        )
+
+    raw = V.make_planes(64, 16, seed=7)
+    cents = [[x / (sum(v * v for v in c) ** 0.5) for x in c] for c in raw]
+    emb = load_table(spark, SF, "embeddings")
+    public = shape(V.semantic_dedup_pairs(emb, cents))
+    assert public == (1, 1, 0, 0)
+    assert public == shape(QUERIES["semantic_dedup_cell_blocked"](spark, SF))
+
+
 def test_scaling_dims_not_force_broadcast(spark):
     """100 TB broadcast policy: part/supplier-derived sides carry NO
     broadcast hint (stats/AQE elect it locally); only fixed-size dims

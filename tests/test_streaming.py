@@ -634,7 +634,6 @@ def test_streaming_verified_near_dups_equals_batch(spark, tmp_path):
         (r.a_id, r.b_id, round(r.jaccard, 9))
         for r in verified_near_dup_pairs(
             docs, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16,
-            impl="expr",
         ).collect()
     }
     assert expect, "fixture must contain verified near-dups"

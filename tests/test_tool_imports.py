@@ -1,11 +1,14 @@
-"""bench.py, tools/ and scripts/ are run by hand, never imported by a
-test, so a renamed or deleted engine name would break them silently.
-Parse each one and check every name it takes from the package."""
+"""bench.py, tools/, scripts/, examples/ and perfbench/ are run by hand,
+never imported by a test, so a renamed or deleted engine name — or a
+removed keyword argument — would break them silently. Parse each one
+and check every name it takes from the package, and every keyword it
+passes to a package callable."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 from pathlib import Path
 
 import pytest
@@ -13,7 +16,13 @@ import pytest
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "firmable_aus_etl_spark"
 FILES = sorted(
-    [ROOT / "bench.py", *ROOT.glob("tools/*.py"), *ROOT.glob("scripts/*.py")]
+    [
+        ROOT / "bench.py",
+        *ROOT.glob("tools/*.py"),
+        *ROOT.glob("scripts/*.py"),
+        *ROOT.glob("examples/*.py"),
+        *ROOT.glob("perfbench/*.py"),
+    ]
 )
 
 
@@ -22,6 +31,36 @@ def _resolve(module: str, name: str):
     if hasattr(mod, name):
         return getattr(mod, name)
     return importlib.import_module(f"{module}.{name}")
+
+
+def _callee(func: ast.expr, aliases: dict[str, object]):
+    """The package object a call's func names directly (``f(...)`` or
+    ``alias.f(...)``), or None."""
+    if isinstance(func, ast.Name):
+        return aliases.get(func.id)
+    if (
+        isinstance(func, ast.Attribute)
+        and isinstance(func.value, ast.Name)
+        and func.value.id in aliases
+    ):
+        return getattr(aliases[func.value.id], func.attr, None)
+    return None
+
+
+def _stale_keywords(call: ast.Call, target: object) -> list[str]:
+    if not callable(target):
+        return []
+    try:
+        params = inspect.signature(target).parameters
+    except (TypeError, ValueError):
+        return []
+    if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+        return []
+    return [
+        f"{getattr(target, '__name__', target)}({kw.arg}=) (line {call.lineno})"
+        for kw in call.keywords
+        if kw.arg is not None and kw.arg not in params
+    ]
 
 
 def _missing_names(path: Path) -> list[str]:
@@ -48,6 +87,8 @@ def _missing_names(path: Path) -> list[str]:
             and not hasattr(aliases[node.value.id], node.attr)
         ):
             missing.append(f"{node.value.id}.{node.attr} (line {node.lineno})")
+        elif isinstance(node, ast.Call):
+            missing += _stale_keywords(node, _callee(node.func, aliases))
     return missing
 
 

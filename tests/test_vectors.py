@@ -281,62 +281,139 @@ def test_semantic_dedup_within_cell_only(spark):
     assert len(sem) >= len(truth) - 3
 
 
+def test_zero_vectors_are_nobodys_near_dup(spark, tmp_path):
+    """Every zero vector signs to the all-ones bucket, so two of them
+    always collide; their cosine is undefined (ANSI mode raises on the
+    0/0). A zero vector is never anyone's near-duplicate: each dedup
+    path returns exactly the planted twin pairs, and the ingest stores
+    and keeps both zero vectors."""
+    from firmable_aus_etl_spark.streaming.incremental import (
+        ingest_embeddings_increment,
+        read_vector_corpus,
+    )
+
+    state, rows = 23, []
+    for i in range(6):
+        vec = []
+        for _ in range(16):
+            state = (state * 1103515245 + 12345) % (1 << 31)
+            vec.append(state / float(1 << 31) - 0.5)
+        rows.append((i, vec))
+        rows.append((i + 1000, [x + 1e-4 for x in vec]))
+    rows += [(500, [0.0] * 16), (1500, [0.0] * 16)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planted = {(i, i + 1000) for i in range(6)}
+
+    lsh = V.cosine_near_dup_pairs(
+        df, dim=16, threshold=0.99, n_planes=4, n_tables=8, seed=3
+    ).collect()
+    assert {(r.a_id, r.b_id) for r in lsh} == planted
+
+    # one cell: blocking cannot split a planted pair
+    sem = V.semantic_dedup_pairs(df, [[1.0] + [0.0] * 15]).collect()
+    assert {(r.a_id, r.b_id) for r in sem} == planted
+
+    # two batches: the second zero vector meets the first in history
+    sd = str(tmp_path / "vstate")
+    kw = dict(dim=16, n_planes=4, n_tables=8, seed=3)
+    ingest_embeddings_increment(spark, df.filter(F.col("vec_id") < 1000), sd, **kw)
+    stats = ingest_embeddings_increment(
+        spark, df.filter(F.col("vec_id") >= 1000), sd, **kw
+    )
+    assert stats["dropped"] == len(planted)
+    kept = {r.vec_id for r in read_vector_corpus(spark, sd).collect()}
+    assert kept == {r.vec_id for r in df.collect()} - {b for _, b in planted}
+    assert {500, 1500} <= kept
+    stored = {r.vec_id for r in spark.read.parquet(f"{sd}/vec_sigs").collect()}
+    assert {500, 1500} <= stored
+
+
 def test_lsh_signature_frame_arrow_expr_parity(spark):
-    # the numpy matmul path must produce the same (id, table, sig)
-    # rows as the pure-expression fold on realistic data
+    # the numpy matmul kernel must produce the same (id, table, sig)
+    # rows as the expression fold hyperplane_signature (table t's
+    # planes are make_planes(seed=seed + 1000*t); OR-of-shifts equals
+    # the kernel's sum of powers) on realistic data
     from firmable_aus_etl_spark.datasets import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    kw = dict(dim=64, n_planes=8, n_tables=4, seed=42)
     a = sorted(
         (r["__id"], r["__tbl"], r["__sig"])
-        for r in V.lsh_signature_frame(emb, impl="arrow", **kw)
+        for r in V.lsh_signature_frame(emb, dim=64, n_planes=8, n_tables=4, seed=42)
         .select("__id", "__tbl", "__sig").collect()
     )
+    sigs = [
+        V.hyperplane_signature(
+            F.col("embedding"), V.make_planes(64, 8, seed=42 + 1000 * t)
+        )
+        for t in range(4)
+    ]
     e = sorted(
-        (r["__id"], r["__tbl"], r["__sig"])
-        for r in V.lsh_signature_frame(emb, impl="expr", **kw)
-        .select("__id", "__tbl", "__sig").collect()
+        tuple(r)
+        for r in emb.select(
+            "vec_id", F.posexplode(F.array(*sigs)).alias("tbl", "sig")
+        ).collect()
     )
     assert a == e
 
 
-def test_semantic_dedup_arrow_expr_parity(spark):
+def _semantic_fixture(spark):
     from firmable_aus_etl_spark.datasets import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     raw = V.make_planes(64, 16, seed=7)
     cents = [[x / (sum(v * v for v in c) ** 0.5) for x in c] for c in raw]
-    a = sorted(map(tuple, V.semantic_dedup_pairs(
-        emb, cents, threshold=0.2, impl="arrow"
-    ).collect()))
-    e = sorted(map(tuple, V.semantic_dedup_pairs(
-        emb, cents, threshold=0.2, impl="expr"
-    ).collect()))
-    assert a == e
-    assert len(a) > 0  # threshold low enough that parity is non-vacuous
+    return emb, cents
+
+
+def test_semantic_dedup_arrow_expr_parity(spark):
+    """The numpy assignment kernel picks the same cell as the
+    expression argmax ivf_assign (highest dot, ties to the lowest
+    cell), and every emitted pair sits in both ends' cell."""
+    emb, cents = _semantic_fixture(spark)
+    cell_of = {
+        r.vec_id: r.cell
+        for r in emb.select(
+            "vec_id", V.ivf_assign(F.col("embedding"), cents, nprobe=1)[0].alias("cell")
+        ).collect()
+    }
+    got = {
+        r["__id"]: r.cell
+        for r in V.assign_cells_arrow(
+            emb, cents, id_col="vec_id", vec_col="embedding"
+        ).select("__id", "cell").collect()
+    }
+    assert got == cell_of
+    pairs = V.semantic_dedup_pairs(emb, cents, threshold=0.2).collect()
+    assert pairs  # threshold low enough that parity is non-vacuous
+    assert all(cell_of[r.a_id] == cell_of[r.b_id] == r.cell for r in pairs)
 
 
 def test_semantic_dedup_arrow_verify_parity(spark):
     """The gram-matrix (applyInPandas) verify must find the identical
-    PAIR SET as the exact expression fold, with cosines equal to 9 dp
-    (numpy pairwise summation differs only in FP order)."""
-    from firmable_aus_etl_spark.datasets import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    raw = V.make_planes(64, 16, seed=7)
-    cents = [[x / (sum(v * v for v in c) ** 0.5) for x in c] for c in raw]
-    kw = dict(threshold=0.2, impl="arrow")
+    PAIR SET as an exact cosine() fold over a same-cell self-join, with
+    cosines equal to 9 dp (numpy pairwise summation differs only in FP
+    order)."""
+    emb, cents = _semantic_fixture(spark)
+    assigned = emb.select(
+        "vec_id", "embedding",
+        V.ivf_assign(F.col("embedding"), cents, nprobe=1)[0].alias("cell"),
+    )
+    a = assigned.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("av"), "cell")
+    b = assigned.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("bv"), "cell")
     e = sorted(
         (r.a_id, r.b_id, r.cell, round(r.cosine, 9))
-        for r in V.semantic_dedup_pairs(emb, cents, verify="expr", **kw).collect()
+        for r in a.join(b, "cell")
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", "cell", V.cosine(F.col("av"), F.col("bv")).alias("cosine"))
+        .where(F.col("cosine") >= 0.2)
+        .collect()
     )
-    a = sorted(
+    got = sorted(
         (r.a_id, r.b_id, r.cell, round(r.cosine, 9))
-        for r in V.semantic_dedup_pairs(emb, cents, verify="arrow", **kw).collect()
+        for r in V.semantic_dedup_pairs(emb, cents, threshold=0.2).collect()
     )
-    assert a == e
-    assert len(a) > 0
+    assert got == e
+    assert len(got) > 0
 
 
 def _lcg_corpus(spark, n=120, dim=16, seed=7):
@@ -498,19 +575,6 @@ def test_multiprobe_deterministic(spark):
     a = V.lsh_multiprobe_topk(qs, df, dim=16, k=3, n_planes=6, n_tables=3, probes=8)
     b = V.lsh_multiprobe_topk(qs, df, dim=16, k=3, n_planes=6, n_tables=3, probes=8)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_multiprobe_arrow_expr_parity(spark):
-    df = _lcg_corpus(spark)
-    qs = df.filter(F.col("vec_id") % 12 == 0)
-    kw = dict(dim=16, k=3, n_planes=6, n_tables=3, probes=8)
-    a = V.lsh_multiprobe_topk(qs, df, impl="expr", **kw)
-    b = V.lsh_multiprobe_topk(qs, df, impl="arrow", **kw)
-    ra = sorted((r.query_id, r.neighbor_id, r.rank, round(r.cosine, 9))
-                for r in a.collect())
-    rb = sorted((r.query_id, r.neighbor_id, r.rank, round(r.cosine, 9))
-                for r in b.collect())
-    assert ra == rb
 
 
 def test_multiprobe_auto_sizing_rule(spark):
