@@ -19,11 +19,6 @@ def group_counts(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return df.groupBy(*keys).agg(F.count("*").alias("cnt"))
 
 
-def column_mean(df: DataFrame, col: str, *, alias: str = "avg_value") -> DataFrame:
-    """op27 — mean over a column (reference: entity_matching_optimized.py:320)."""
-    return df.agg(F.avg(F.col(col)).alias(alias))
-
-
 def argmax_per_group(
     df: DataFrame, keys: Sequence[str], value_col: str, arg_col: str
 ) -> DataFrame:

@@ -12,7 +12,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import StringType
 
 
 def normalize_column_names(df: DataFrame) -> DataFrame:
@@ -71,15 +71,6 @@ def conform_schema(df: DataFrame, columns: Sequence[str]) -> DataFrame:
         if c not in out.columns:
             out = out.withColumn(c, F.lit(""))
     return out.select(*columns)
-
-
-def conform_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
-    """op11 (typed variant) — conform + cast to a StructType registry entry."""
-    out = df
-    for f in schema.fields:
-        if f.name not in out.columns:
-            out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return out.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
 
 
 def truncate_strings(df: DataFrame, limits: dict[str, int]) -> DataFrame:

@@ -18,6 +18,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from firmable_aus_etl_spark.functions.similarity import normalize_name
 
@@ -190,26 +191,6 @@ def minhash_signature_from(
             F.transform(ab, lambda p: F.pmod(h * p["a"] + p["b"], F.lit(_MERSENNE_31))),
             lambda x, y: F.least(x, y),
         ),
-    )
-
-
-def minhash_signature(
-    col: Column | str, *, num_hashes: int = 32, shingle_n: int = 3
-) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes``.
-
-    Hash family: xxhash64 seeded by the hash index (xxhash64(i,
-    shingle)) — JVM-side, no UDF, O(shingles · num_hashes) per row and
-    no shuffle. reference analog: this generalizes the 2-char prefix
-    block (entity_matching_tfidf.py:159) into a collision-probability-
-    controlled bucket key for 100 TB near-dup dedup.
-
-    Inline variant (rebuilds shingles inside the expression) — fine for
-    literals/tests; the operator path goes through
-    ``minhash_signature_from`` with a materialized shingle column.
-    """
-    return minhash_signature_from(
-        F.array_distinct(shingles(col, shingle_n)), num_hashes=num_hashes
     )
 
 
@@ -1314,27 +1295,56 @@ def connected_components(
       paths) where label propagation would crawl through
       diameter-many rounds at 100 TB.
 
-    ``stats`` (optional dict) receives {"rounds": n} for either
-    algorithm — the convergence telemetry the chain tests assert on.
+    Small graphs finish on the driver: when the materialized edge set
+    has at most ``partitioning._MAX_DRIVER_EDGES`` rows, the size probe
+    that found out has already fetched it, and union-find returns the
+    same labeling as a local relation (plus the ``nodes`` singletons).
+    At sf0.01 this replaces a loop whose every round is AQE stage jobs
+    at ~60-100 ms each for a few dozen edges (PERF.md). Larger edge
+    sets run the loops below over the same materialized edges.
+
+    Edges with an endpoint outside ``nodes`` are ignored by both
+    algorithms on both routes, and such endpoints never appear in the
+    output; self-loops and duplicate or reversed edges are tolerated.
+
+    ``stats`` (optional dict) receives ``route`` ("driver" or
+    "distributed"), ``edges`` (the directed edge rows on the driver
+    route; None on the distributed route, which does not count them)
+    and ``rounds`` (0 on the driver route) — the telemetry the chain
+    tests assert on.
 
     Returns (node_id, cluster) where cluster = min node id reachable —
     fully deterministic (both algorithms produce the identical
     labeling), so the output is oracle-hashable (DuckDB twin:
     recursive-CTE reachability + min).
     """
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"unknown algorithm: {algorithm!r}")
     # materialize the edge set ONCE: the loop joins `und` every round,
     # and without this the full upstream pair computation (e.g. the
     # prefix-Jaccard join) re-executes per iteration — measured 8.4s ->
     # 3.6s at sf0.1 for near_dup_clusters (edges dominate; rounds are
     # cheap). Same move MLlib/GraphX make before iterating.
     from firmable_aus_etl_spark.operators.partitioning import (
+        collect_small,
         iter_materialize,
+        iter_release,
         iter_unpersist,
     )
 
-    # eager=False: the first consumer (round 1's neighbor join / star's
-    # first edge_sig) materializes the blocks inside its own job — an
-    # eager checkpoint would be one extra blocking job for no reuse gain.
+    directed = edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+    if nodes is None:
+        node_frame = None
+    else:
+        node_frame = nodes.select(F.col(node_id)).distinct()
+        # keep only edges inside the caller's node universe, so no
+        # route or algorithm can bridge components through (or label)
+        # an outside endpoint
+        for end in ("x", "y"):
+            directed = directed.join(
+                node_frame.select(F.col(node_id).alias(end)), end, "left_semi"
+            )
+        directed = directed.select("x", "y")
     # Materialize the DIRECTED edges, then build the symmetric view from
     # the cached frame (round-7): a union whose two branches both hang
     # off the raw edge plan executes the whole upstream pair pipeline
@@ -1346,11 +1356,20 @@ def connected_components(
     # the per-round neighbor joins read one cached frame instead of
     # re-unioning two cache scans per propagate step — measured
     # 1.7 -> 2.5 s at sf0.1 without it)
-    directed = iter_materialize(
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y")),
-        checkpoint_dir,
-        eager=False,
-    )
+    # eager=False still runs every upstream shuffle stage here under
+    # AQE (see iter_materialize); the probe's job computes the blocks.
+    directed = iter_materialize(directed, checkpoint_dir, eager=False)
+    rows = collect_small(directed, "connected_components: edge probe")
+    if rows is not None:
+        # the returned local relation does not read `directed`
+        iter_release(directed, checkpoint_dir)
+        if stats is not None:
+            stats.update(route="driver", edges=len(rows), rounds=0)
+        return _components_on_driver(
+            directed, rows, node_frame, node_id=node_id
+        )
+    if stats is not None:
+        stats.update(route="distributed", edges=None)
     und = iter_materialize(
         directed.union(
             directed.select(F.col("y").alias("x"), F.col("x").alias("y"))
@@ -1358,10 +1377,8 @@ def connected_components(
         checkpoint_dir,
         eager=False,
     )
-    if nodes is None:
+    if node_frame is None:
         node_frame = und.select(F.col("x").alias(node_id)).distinct()
-    else:
-        node_frame = nodes.select(F.col(node_id)).distinct()
     if algorithm == "star":
         out = _connected_components_star(
             und, node_frame, node_id=node_id, max_iter=max_iter, stats=stats,
@@ -1375,20 +1392,14 @@ def connected_components(
         iter_unpersist(und, checkpoint_dir)
         iter_unpersist(directed, checkpoint_dir)
         return out
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     # Iterate over EDGE-PARTICIPATING nodes only: a node with no edges
     # can never change its label, yet carrying it through the loop
     # would shuffle the whole corpus every round — on a dedup graph
     # where 1% of docs have a near-dup, that is 100x wasted shuffle
     # volume per round at 100 TB. Singletons rejoin as self-labels at
     # the end (one anti-join), the same assembly the star variant uses.
+    # (every edge endpoint is already inside the node universe)
     edge_nodes = und.select(F.col("x").alias(node_id)).distinct()
-    if nodes is not None:
-        # endpoints outside the caller's node universe stay excluded
-        # (exactly the pre-round-6 semantics, where only node_frame
-        # rows ever carried labels)
-        edge_nodes = edge_nodes.join(node_frame, node_id, "left_semi")
     labels = edge_nodes.select(node_id, F.col(node_id).alias("cluster"))
 
     def propagate(lbl: DataFrame, *, keep_old: bool = False) -> DataFrame:
@@ -1410,13 +1421,15 @@ def connected_components(
     rounds = 0
     prev_mat: DataFrame | None = None
     for _ in range(max(1, (max_iter + 1) // 2)):
-        # TWO propagation steps per materialized job (round-6): each
+        # TWO propagation steps per materialization (round-6): each
         # loop turn chains two join+agg rounds into one lineage, then
-        # the EXACT convergence check rides in the same action —
-        # eager=False means the changed-count computes AND persists the
-        # frame, so the whole double-round is ONE Spark job (halves
-        # job-submit latency, the dominant per-round cost; shuffle
-        # volume per round unchanged). The convergence check compares
+        # the EXACT convergence check rides on the materialized frame —
+        # under AQE the eager=False call itself runs the turn's shuffle
+        # stages (one job each, see iter_materialize) and the
+        # changed-count computes AND persists the blocks, so a turn
+        # pays one set of stage jobs for two rounds (halves job-submit
+        # latency, the dominant per-round cost; shuffle volume per
+        # round unchanged). The convergence check compares
         # the LAST PAIR of steps (step k vs step k-1), not step k vs
         # the turn start (round-7): labels are monotone non-increasing,
         # so zero change between consecutive steps iff step k-1 was
@@ -1454,6 +1467,46 @@ def connected_components(
     singletons = node_frame.join(labels.select(node_id), node_id, "left_anti")
     return labels.unionByName(
         singletons.select(node_id, F.col(node_id).alias("cluster"))
+    )
+
+
+def _components_on_driver(
+    directed: DataFrame,
+    rows: list,
+    node_frame: DataFrame | None,
+    *,
+    node_id: str,
+) -> DataFrame:
+    """connected_components' driver route: the min-reachable-id labeling
+    of the collected edge rows by union-find, as a local relation.
+    Linking the larger root under the smaller keeps every root its
+    component's minimum id. With a node frame, every node without an
+    edge joins as its own cluster, as on the distributed route."""
+    from firmable_aus_etl_spark.operators.partitioning import local_frame
+
+    parent: dict = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]  # path halving
+            v = parent[v]
+        return v
+
+    for x, y in rows:
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    id_type = directed.schema["x"].dataType
+    labels = local_frame(
+        directed.sparkSession,
+        [(v, find(v)) for v in parent],
+        StructType([StructField(node_id, id_type), StructField("cluster", id_type)]),
+    )
+    if node_frame is None:
+        return labels
+    return node_frame.join(F.broadcast(labels), node_id, "left").select(
+        node_id, F.coalesce("cluster", node_id).alias("cluster")
     )
 
 
@@ -1522,8 +1575,9 @@ def _connected_components_star(
             out = joined.filter(F.col("y") <= F.col("x")).select(
                 F.col("y").alias("x"), F.col("m").alias("y")
             ).union(mins.select(F.col("x"), F.col("m").alias("y")))
-        # eager=False: the edge-signature aggregate that follows every
-        # pass materializes the blocks in its own job
+        # eager=False: the pass's shuffle stages run at this call
+        # under AQE (see iter_materialize); the edge-signature
+        # aggregate that follows every pass computes the blocks
         return iter_materialize(
             out.filter(F.col("x") != F.col("y")).distinct(), checkpoint_dir,
             eager=False,

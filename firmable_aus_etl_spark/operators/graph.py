@@ -14,13 +14,16 @@ is enumerated once at its lowest vertex and closed with ONE more
 equi-join probe against the edge set — no node ever sees more than
 its out-degree^2 wedge rows, and orienting by id (or by degree for
 adversarial skew) keeps hub fan-out bounded. Both joins are plain
-shuffles on vertex keys; no driver-side adjacency is built.
+shuffles on vertex keys; no driver-side adjacency is built for edge
+sets above partitioning._MAX_DRIVER_EDGES (graph_summary finishes
+smaller ones on the driver).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def cooccurrence_pairs(
@@ -182,8 +185,34 @@ def graph_summary(pairs: DataFrame, src: str = "a", dst: str = "b") -> DataFrame
     canonicalized and MATERIALIZED once (localCheckpoint): four
     measures reference it, and without the checkpoint each would
     re-execute the full upstream pair generation (e.g. the co-purchase
-    self-join) from scratch."""
+    self-join) from scratch.
+
+    Small graphs finish on the driver: when the simple edge set has at
+    most ``partitioning._MAX_DRIVER_EDGES`` rows, the size probe that
+    found out has already fetched it, and the four counts are computed
+    locally (the same degree sums, and the same degree-ordered triangle
+    enumeration as triangle_count). Both routes apply one
+    clustering-coefficient expression in Spark, so they round alike."""
+    from firmable_aus_etl_spark.operators.partitioning import (
+        collect_small,
+        iter_release,
+        local_frame,
+    )
+
+    # eager=False still runs every upstream shuffle stage here under
+    # AQE (see partitioning.iter_materialize); the probe's job computes
+    # the blocks
     edges = undirected_simple_edges(pairs, src, dst).localCheckpoint(eager=False)
+    rows = collect_small(edges, "graph_summary: edge probe")
+    if rows is not None:
+        # the returned one-row relation does not read `edges`
+        iter_release(edges, None)
+        counts = local_frame(
+            edges.sparkSession,
+            [_summary_counts(rows)],
+            StructType([StructField(c, LongType()) for c in _COUNTS]),
+        )
+        return _with_clustering_coeff(counts)
     # nodes, edges, and wedges all derive from ONE degree aggregation
     # (n_edges = sum(deg)/2, n_wedges = sum C(deg,2)) — one pass over
     # the checkpointed edge frame and a single scalar attachment
@@ -201,21 +230,42 @@ def graph_summary(pairs: DataFrame, src: str = "a", dst: str = "b") -> DataFrame
             (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2).cast("long"), F.lit(0)
         ).alias("n_wedges"),
     )
-    tri = triangle_count(edges)
-    return (
-        base.crossJoin(tri)
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            F.round(
-                F.when(F.col("n_wedges") > 0,
-                       3.0 * F.col("n_triangles") / F.col("n_wedges"))
-                .otherwise(F.lit(0.0)),
-                6,
-            ).alias("clustering_coeff"),
-        )
+    return _with_clustering_coeff(base.crossJoin(triangle_count(edges)))
+
+
+def _summary_counts(rows: list) -> tuple[int, int, int, int]:
+    """(n_nodes, n_edges, n_wedges, n_triangles) of a collected simple
+    edge list (a < b, distinct): graph_summary's driver route. Edges
+    are oriented from the lower to the higher (degree, id) rank, as in
+    _degree_directed, and each triangle is counted once at its
+    lowest-rank vertex: |out(u) & out(v)| summed over oriented u -> v."""
+    deg: dict = {}
+    for a, b in rows:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    out: dict = {}
+    for a, b in rows:
+        u, v = (a, b) if (deg[a], a) < (deg[b], b) else (b, a)
+        out.setdefault(u, set()).add(v)
+    empty: set = set()
+    triangles = sum(len(vs & out.get(v, empty)) for vs in out.values() for v in vs)
+    wedges = sum(d * (d - 1) // 2 for d in deg.values())
+    return len(deg), len(rows), wedges, triangles
+
+
+_COUNTS = ("n_nodes", "n_edges", "n_wedges", "n_triangles")
+
+
+def _with_clustering_coeff(counts: DataFrame) -> DataFrame:
+    """graph_summary's output from its one-row frame of the four counts."""
+    return counts.select(
+        *_COUNTS,
+        F.round(
+            F.when(F.col("n_wedges") > 0,
+                   3.0 * F.col("n_triangles") / F.col("n_wedges"))
+            .otherwise(F.lit(0.0)),
+            6,
+        ).alias("clustering_coeff"),
     )
 
 

@@ -15,6 +15,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def iter_materialize(
@@ -34,6 +35,14 @@ def iter_materialize(
       round instead of dying. Costs one write+read of the frame per
       materialization; amortized over rounds it is the standard price
       of durable iteration (GraphX's checkpointInterval).
+
+    ``eager=False`` does NOT defer the upstream work to the first
+    consumer under this engine's session config: with AQE on, the call
+    itself plans the frame with ``toRdd``, and AQE runs every upstream
+    shuffle stage right there (measured: a connected-components edge
+    checkpoint ran 3 jobs, a loop checkpoint 9, while the query was
+    still being built). Only the frame's final stage — the blocks
+    themselves — waits for the first consumer's job.
 
     The checkpoint dir is set once per SparkContext (a global): the
     first reliable call pins it, later calls with a DIFFERENT dir
@@ -87,6 +96,63 @@ def iter_unpersist(df: DataFrame | None, checkpoint_dir: str | None) -> None:
     """
     if df is not None and checkpoint_dir is not None:
         getattr(df, "_iter_cached", df).unpersist()
+
+
+def iter_release(df: DataFrame, checkpoint_dir: str | None) -> None:
+    """Release an iter_materialize frame that no plan will read again.
+
+    Unlike iter_unpersist this also acts on the localCheckpoint path:
+    the blocks are the frame's only copy, so call it only once every
+    consumer has run (e.g. after the rows were collected to the
+    driver) — a later read of ``df`` would fail.
+    """
+    if checkpoint_dir is not None:
+        iter_unpersist(df, checkpoint_dir)
+    else:
+        # the LogicalRDD leaf holds the locally checkpointed RDD
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+# Largest edge set a graph operator finishes on the driver
+# (dedup.connected_components, graph.graph_summary) — the same ceiling
+# as dedup._MAX_HOT_LITERAL. Union-find over 20k edges took <= 22 ms
+# and the degree-ordered triangle count <= 64 ms (PERF.md).
+_MAX_DRIVER_EDGES = 20_000
+
+
+def collect_small(df: DataFrame, description: str) -> list | None:
+    """``df``'s rows if it has at most ``_MAX_DRIVER_EDGES`` of them,
+    else None.
+
+    One ``limit(N + 1).collect()`` is both the size probe and the fetch
+    (the hot-list pattern of dedup.df_pruned_shingles), so a small
+    frame costs one job and a large one a bounded read. Call it on a
+    materialized frame: the route that does not fit reads the same
+    blocks instead of recomputing them. The job runs under
+    ``description`` so traces name it; the thread's previous job
+    description is restored afterwards.
+    """
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        rows = df.coalesce(1).limit(_MAX_DRIVER_EDGES + 1).collect()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    return rows if len(rows) <= _MAX_DRIVER_EDGES else None
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order).
+
+    Goes through pandas so that, with Arrow on (session.py), Spark
+    plans a LocalRelation: a plain list becomes an RDD whose scan
+    starts a Python worker, which measured 0.6-0.9 s against 0.25-0.4 s
+    for the noop sink of 40k rows.
+    """
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def salted_join(

@@ -209,8 +209,9 @@ def q_copurchase_graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles, global clustering coefficient. Triangle counting via
     the oriented two-join pattern (Suri-Vassilvitskii) — wedges
     enumerate once at their lowest vertex, one equi-join probe closes
-    them; no adjacency ever materializes driver-side
-    (operators/graph.py). Edge generation via cooccurrence_pairs:
+    them (operators/graph.py); an edge set of at most 20k rows is
+    counted on the driver instead, from the one collect that probed its
+    size. Edge generation via cooccurrence_pairs:
     one groupBy(order) + in-array pair expansion instead of the
     self-join — one wide shuffle fewer, same edge set (round-6 A/B in
     PERF.md)."""

@@ -353,46 +353,6 @@ def _planes_values_sql(tagged: list[tuple[int, int, list[float]]]) -> str:
     )
 
 
-def _lsh_oracle(dim: int, n_planes: int, n_tables: int, seed: int) -> str:
-    """Sign-LSH is fully deterministic given the hyperplane literals, so
-    the EXACT same candidate set is SQL-expressible: re-derive each
-    table's signature as a bit-sum of dot-product signs. Dot products
-    fold left-to-right in double on both engines -> bit-identical, so
-    the sign (and hence every bucket) matches."""
-    from firmable_aus_etl_spark.functions.vectors import make_planes
-
-    rows = [
-        (t, i, p)
-        for t in range(n_tables)
-        for i, p in enumerate(make_planes(dim, n_planes, seed=seed + 1000 * t))
-    ]
-    return f"""
-WITH p(tbl, plane, pvec) AS (VALUES {_planes_values_sql(rows)}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sig AS (
-  SELECT e.vec_id, p.tbl,
-         CAST(sum(CASE WHEN list_dot_product(e.v, p.pvec) >= 0
-                       THEN (CAST(1 AS BIGINT) << p.plane) ELSE 0 END) AS BIGINT) AS sig
-  FROM e CROSS JOIN p GROUP BY 1, 2
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM sig q JOIN sig c ON q.tbl = c.tbl AND q.sig = c.sig AND q.vec_id <> c.vec_id
-  WHERE q.vec_id % 10 = 0
-),
-scored AS (
-  SELECT query_id, neighbor_id, list_cosine_similarity(eq.v, ec.v) AS cosine
-  FROM cand JOIN e eq ON cand.query_id = eq.vec_id
-            JOIN e ec ON cand.neighbor_id = ec.vec_id
-),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM r WHERE rank <= 3
-"""
-
-
 def _np_case_sql(
     target: int = 16, min_planes: int = 6, max_planes: int = 16
 ) -> str:
@@ -580,25 +540,6 @@ cand AS (
   FROM pr JOIN sig c ON pr.tbl = c.tbl AND pr.probe_sig = c.sig
   WHERE c.vec_id <> pr.vec_id
 )"""
-
-
-def _multiprobe_lsh_oracle(
-    dim: int, n_planes: int, n_tables: int, probes: int, seed: int
-) -> str:
-    """Multi-probe candidates + exact cosine re-rank, top-3."""
-    return f"""
-WITH {_multiprobe_ctes(dim, n_planes, n_tables, probes, seed)},
-scored AS (
-  SELECT query_id, neighbor_id, list_cosine_similarity(eq.v, ec.v) AS cosine
-  FROM cand JOIN e eq ON cand.query_id = eq.vec_id
-            JOIN e ec ON cand.neighbor_id = ec.vec_id
-),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine
-FROM r WHERE rank <= 3
-"""
 
 
 def _ann_recall_oracle(
@@ -1721,7 +1662,6 @@ def _cosine_verify_top1(
     return top1.select("a_id", "b_id", F.round("cosine", 6).alias("cosine"))
 
 
-
 @register("tfidf_cosine_simhash_top1", _tfidf_simhash_oracle())
 def q_tfidf_cosine_simhash_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op22 DESIGNATED SCALE ROUTE, banding AUTO-SIZED (round-8
@@ -2687,4 +2627,3 @@ def q_nb_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("true_lang", F.col("predicted"))
         .agg(F.count("*").alias("n_docs"))
     )
-

@@ -54,13 +54,3 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
-
-
-def tune_for_scale(spark: SparkSession, target_partitions: int) -> None:
-    """Adjust shuffle width for a known input scale.
-
-    At 100 TB with ~128 MB target partitions the initial shuffle count
-    should be O(input_bytes / 128MB); AQE then coalesces. Exposed as a
-    function so pipelines can set it per-stage instead of globally.
-    """
-    spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))

@@ -4,8 +4,9 @@ The reference pages through the CDX API with limit/offset and a
 tolerant per-line JSON parse (reference: extract_common_crawl.py:21-43,
 144-163). Spark-first re-expression:
 
-- the HTTP fetch is a driver-side utility (gated on ``requests``; the
-  engine itself never blocks on the network inside a task);
+- the HTTP fetch stays outside the engine (``CDX_API`` plus
+  ``cdx_request_params`` give the page request); the engine itself
+  never blocks on the network inside a task;
 - fetched shards land as JSON-lines files and are scanned with the
   PERMISSIVE reader (bad lines -> _corrupt_record, not job failure);
 - pagination becomes one row per (offset) shard — a partitioned read.
@@ -49,29 +50,6 @@ def cdx_request_params(
         "limit": str(limit),
         "offset": str(offset),
     }
-
-
-def fetch_cdx_shard(
-    domain_pattern: str, out_path: str, *, limit: int = 1000, offset: int = 0
-) -> str | None:
-    """Driver-side fetch of one CDX page to a JSON-lines file.
-
-    Gated: returns None when ``requests`` is unavailable or the fetch
-    fails — extraction is an edge utility, never a query dependency.
-    """
-    try:  # pragma: no cover - network path
-        import requests
-
-        resp = requests.get(
-            CDX_API, params=cdx_request_params(domain_pattern, limit=limit, offset=offset),
-            timeout=30,
-        )
-        resp.raise_for_status()
-        with open(out_path, "w") as f:
-            f.write(resp.text)
-        return out_path
-    except Exception:
-        return None
 
 
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:

@@ -1115,28 +1115,6 @@ def span_view_increment(
     out.write.mode("overwrite").parquet(os.path.join(view_root, f"v{batch_id}"))
 
 
-def span_view_stream(
-    stream: DataFrame,
-    state_dir: str,
-    *,
-    checkpoint: str,
-    n: int = 8,
-    min_docs: int = 3,
-):
-    """Structured Streaming wrapper: one span_view_increment per
-    micro-batch (foreachBatch, availableNow)."""
-
-    def on_batch(batch: DataFrame, batch_id: int) -> None:
-        span_view_increment(batch, state_dir, batch_id, n=n, min_docs=min_docs)
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def read_span_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest complete version of the incremental span-dedup view."""
     root = os.path.join(state_dir, "view")

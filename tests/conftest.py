@@ -15,3 +15,13 @@ def spark():
     s = get_session("tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def distributed_graph_route(monkeypatch):
+    """Force connected_components and graph_summary onto their
+    distributed route (the label/star loops, triangle_count): with the
+    driver ceiling at -1 no edge set fits, not even an empty one."""
+    from firmable_aus_etl_spark.operators import partitioning
+
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", -1)

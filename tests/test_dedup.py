@@ -185,7 +185,7 @@ def test_connected_components_basic(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_chain_and_singletons(spark):
+def test_connected_components_chain_and_singletons(spark, distributed_graph_route):
     # chain 5-4-3-2-1 forces multiple propagation rounds; node 99 is a
     # singleton supplied via the nodes frame
     edges = spark.createDataFrame(
@@ -201,7 +201,9 @@ def test_connected_components_chain_and_singletons(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 99: 99}
 
 
-def test_connected_components_star_matches_label_on_fixtures(spark):
+def test_connected_components_star_matches_label_on_fixtures(
+    spark, distributed_graph_route
+):
     """Both algorithms are exact — identical labeling on the basic
     multi-component and chain+singleton fixtures."""
     cases = [
@@ -229,7 +231,9 @@ def test_connected_components_star_matches_label_on_fixtures(spark):
         assert star == lab, (edge_rows, star, lab)
 
 
-def test_connected_components_star_chain_logarithmic_rounds(spark):
+def test_connected_components_star_chain_logarithmic_rounds(
+    spark, distributed_graph_route
+):
     """The pathological case star-contraction exists for: a 1000-node
     chain (diameter 999). Label propagation needs diameter rounds;
     large/small-star must converge in O(log n) alternating passes and
@@ -247,7 +251,9 @@ def test_connected_components_star_chain_logarithmic_rounds(spark):
     assert stats["rounds"] <= 15, f"star took {stats['rounds']} rounds on a chain"
 
 
-def test_connected_components_star_matches_label_random_graph(spark):
+def test_connected_components_star_matches_label_random_graph(
+    spark, distributed_graph_route
+):
     """Seeded random graph with many components of varied shapes."""
     import random
 
@@ -459,7 +465,9 @@ def test_prefix_jaccard_max_df_bounds_candidates(spark):
     assert (900, 901) in got_tight
 
 
-def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
+def test_connected_components_reliable_checkpoint_identical(
+    spark, tmp_path, distributed_graph_route
+):
     """Round-6 verdict #3: checkpoint_dir switches per-round
     materialization from localCheckpoint to reliable checkpoint();
     labeling must be identical either way, for both algorithms (and
@@ -495,7 +503,9 @@ def test_connected_components_reliable_checkpoint_identical(spark, tmp_path):
     assert pr_base == pr_dur
 
 
-def test_reliable_checkpoint_cache_stays_bounded(spark, tmp_path):
+def test_reliable_checkpoint_cache_stays_bounded(
+    spark, tmp_path, distributed_graph_route
+):
     """Round-7 ADVICE #1: checkpoint() returns a LogicalRDD-leaf frame,
     so unpersisting IT never released the pre-checkpoint cache —
     MEMORY_AND_DISK entries accumulated one per round. iter_materialize
