@@ -126,9 +126,12 @@ def collect_small(df: DataFrame, description: str) -> list | None:
 
     One ``limit(N + 1).collect()`` is both the size probe and the fetch
     (the hot-list pattern of dedup.df_pruned_shingles), so a small
-    frame costs one job and a large one a bounded read. Call it on a
-    materialized frame: the route that does not fit reads the same
-    blocks instead of recomputing them. The job runs under
+    frame costs one job and a large one a bounded read. ``coalesce(1)``
+    keeps it one job: a bare limit takes partitions in growing waves,
+    one job each (3 on an ~8-partition edge frame), while one task
+    reading the partitions in turn still stops after N + 1 rows. Call
+    it on a materialized frame: the route that does not fit reads the
+    same blocks instead of recomputing them. The job runs under
     ``description`` so traces name it; the thread's previous job
     description is restored afterwards.
     """
