@@ -1004,11 +1004,14 @@ def build_ivf_index(
     else:
         raw = make_planes(dim, n_cells, seed=seed)
         cents = [[x / (sum(v * v for v in c) ** 0.5) for x in c] for c in raw]
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    from firmable_aus_etl_spark.operators.partitioning import (
+        ensure_parallelism,
+        local_frame,
+    )
 
-    from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
+    local_frame(
+        spark, list(enumerate(cents)), "cell int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
     assigned = ensure_parallelism(corpus, corpus_id).select(
         F.col(corpus_id).alias("neighbor_id"),

@@ -45,8 +45,8 @@ def _heavy_terms(
     suffix still reaches the threshold. Compared on RAW weights
     (sfx >= t^2 * total <=> unit-space rev_cum >= t^2), so no per-token
     normalization join is needed — one shuffle+sort produces both
-    window sums. Shared by the prefix join and the adaptive
-    dispatcher's pruning-power estimate."""
+    window sums. estimate_cosine_plan replays the same marking on the
+    driver."""
     ids = [id_col, *block_cols]
     w2 = F.col(weight_col) * F.col(weight_col)
     w_suffix = (
@@ -69,7 +69,6 @@ def cosine_prefix_join(
     weight_col: str,
     threshold: float,
     block_cols: Sequence[str] = (),
-    heavy: DataFrame | None = None,
 ) -> DataFrame:
     """Exact cosine-threshold self-join of a sparse weighted term
     relation ``wt`` = (id, [blocks...], token, weight).
@@ -79,24 +78,20 @@ def cosine_prefix_join(
     is computed from the RAW weights over shared tokens — same
     accumulation the naive join does — so downstream rounding/tie
     logic is unchanged; the prefix bound only prunes candidates.
-
-    ``heavy`` lets a caller that already computed the prefix marking
-    (the adaptive dispatcher) pass it in instead of recomputing.
     """
     blocks = list(block_cols)
 
     nrm = wt.groupBy(id_col, *blocks).agg(
         F.sqrt(F.sum(F.col(weight_col) * F.col(weight_col))).alias("nrm")
     )
-    if heavy is None:
-        heavy = _heavy_terms(
-            wt,
-            id_col=id_col,
-            token_col=token_col,
-            weight_col=weight_col,
-            threshold=threshold,
-            block_cols=blocks,
-        )
+    heavy = _heavy_terms(
+        wt,
+        id_col=id_col,
+        token_col=token_col,
+        weight_col=weight_col,
+        threshold=threshold,
+        block_cols=blocks,
+    )
 
     a_all = wt.select(
         F.col(id_col).alias("a_id"),
@@ -164,9 +159,9 @@ def cosine_naive_join(
 
     ``id_col`` must be GLOBALLY unique (not merely unique per block):
     both exact plans group norms by (id, blocks) identically — so the
-    plans can never diverge under adaptive dispatch — but the final
-    norm attach joins on id alone, which would duplicate rows for an
-    id repeated across blocks."""
+    plans can never diverge whichever estimate_cosine_plan picks — but
+    the final norm attach joins on id alone, which would duplicate
+    rows for an id repeated across blocks."""
     blocks = list(block_cols)
     nrm = wt.groupBy(id_col, *blocks).agg(
         F.sqrt(F.sum(F.col(weight_col) * F.col(weight_col))).alias("nrm")
@@ -199,18 +194,40 @@ def estimate_cosine_plan(
     doc_tokens: Sequence[tuple[tuple, Sequence[str]]],
     threshold: float,
 ) -> dict:
-    """Driver-side plan estimator for cosine_join_adaptive — pure
-    Python over a small DOC SAMPLE (fixed-size, e.g. 512 docs pulled
-    with TakeOrdered by doc-hash: deterministic, bounded driver state
-    like the k-means centroid collects). ``doc_tokens`` is
+    """Choose between cosine_naive_join and cosine_prefix_join — both
+    exact, so the choice is pure physical planning (reference analog:
+    the size-based matcher dispatch in entity_matching_optimized.py:312,
+    lifted one level up to plan selection). Pure Python over a small
+    DOC SAMPLE (fixed-size, e.g. 512 docs pulled with TakeOrdered by
+    doc-hash: deterministic, bounded driver state like the k-means
+    centroid collects). ``doc_tokens`` is
     [(blocks_tuple, [token, ...]), ...].
 
-    Mirrors the Spark stats exactly: in-sample df -> tf*(1/df)
-    weights -> per-doc heavy prefix (L2-suffix >= t^2 * total under
-    the same (weight desc, token asc) order) -> posting counts ->
-    the same est_naive / est_prefix comparison. Because both
-    estimates scale by the same sample-rate^2, the decision is
-    invariant to the (unknown) rate — no corpus count needed.
+    In-sample df -> tf*(1/df) weights -> per-doc heavy prefix
+    (L2-suffix >= t^2 * total under _heavy_terms' (weight desc, token
+    asc) order) -> posting counts (per (blocks, token): cnt = posting
+    size, hcnt = heavy-prefix posting size, the index side the prefix
+    join uses) -> the cost model:
+
+        est_naive  = sum cnt*(cnt-1) / 2          (its one pair-row pass)
+        cand_rows  = sum hcnt*(cnt-1)             (prefix candidate rows)
+        pairs_ub   = min(cand_rows, in-block doc pairs)
+        est_prefix = cand_rows + pairs_ub * (T + 2)
+
+    where T = avg tokens/doc. The second term is the part the naive
+    plan never pays: after the distinct, the exact dot re-joins every
+    candidate PAIR against the FULL token list of one side. On
+    template-dense corpora the candidate pairs approach the whole
+    in-block pair space (measured on the documents fixture: 158,620 of
+    159,293 pairs survive the filter), so the one-pass naive join
+    wins; on near-dup-sparse corpora heavy postings collapse and
+    prefix wins unboundedly. Ties go to prefix.
+
+    The estimates are unbiased under document sampling (E[c_s*(c_s-1)]
+    = p^2 * c*(c-1)) and both scale by the same p^2, so the decision is
+    invariant to the (unknown) rate — no corpus count needed. A Spark
+    aggregate of the same statistics is stage-latency-bound (PERF.md
+    decision 17), which is why the estimate runs on the driver.
     """
     from collections import Counter
 
@@ -266,213 +283,6 @@ def estimate_cosine_plan(
         "tokens_per_doc": tokens_per_doc,
         "sample_docs": len(tfs),
     }
-
-
-def cosine_join_adaptive(
-    wt: DataFrame,
-    *,
-    id_col: str,
-    token_col: str,
-    weight_col: str,
-    threshold: float,
-    block_cols: Sequence[str] = (),
-    stats_sample: float = 1.0,
-    stats_wt: DataFrame | None = None,
-    plan: str | None = None,
-    decision_out: dict | None = None,
-    stats_cache: dict | None = None,
-) -> DataFrame:
-    """Stats-based dispatch between the naive inverted-index join and
-    the AllPairs prefix-filtered join — both exact, so the choice is
-    pure physical planning (reference analog: the size-based matcher
-    dispatch in entity_matching_optimized.py:312, lifted one level up
-    to plan selection).
-
-    Cost model, from posting-list sizes only (per (blocks, token):
-    cnt = posting size, hcnt = heavy-prefix posting size — the exact
-    index side the prefix join would use):
-
-        est_naive  = sum cnt*(cnt-1) / 2          (its one pair-row pass)
-        cand_rows  = sum hcnt*(cnt-1)             (prefix candidate rows)
-        pairs_ub   = min(cand_rows, in-block doc pairs)
-        est_prefix = cand_rows + pairs_ub * (T + 2)
-
-    where T = avg tokens/doc. The second term is the part the naive
-    plan never pays: after the distinct, the exact dot re-joins every
-    candidate PAIR against the FULL token list of one side (|tokens|
-    rows per pair), then probes the other side. On template-dense
-    corpora the candidate pairs approach the whole in-block pair space
-    (measured on the documents fixture: 158,620 of 159,293 pairs
-    survive the filter — 0.4% pruning), so est_prefix > est_naive and
-    the one-pass naive join wins. On near-dup-sparse corpora (the
-    common 100 TB regime) heavy postings collapse, cand_rows ≪
-    pair_rows, and prefix wins unboundedly. Ties in work estimates go
-    to prefix — at equal row counts its candidate shuffle keys on
-    (block, token) with smaller payloads.
-
-    Sampled stats: the pair sums only steer a 2-way choice whose
-    regimes differ by multiples, so they can be estimated from a
-    hash-sample of DOCUMENTS (whole docs, so per-doc heavy-prefix
-    flags stay exact within the sample). All three estimators are
-    unbiased — E[c_s*(c_s-1)] = p^2 * c*(c-1) when each element of a
-    posting survives independently with probability p — and both
-    sides of the comparison scale by the same p^2, so the decision
-    needs no rescaling; only the telemetry is scaled back. Two ways
-    to sample:
-
-    - ``stats_wt``: the caller supplies an independently-built term
-      frame over a doc sample (e.g. tokenize p of the docs with
-      in-sample df). This keeps the stats DAG free of the full
-      corpus — one cheap extra scan at 100 TB — and is the fast path
-      used by the registered query.
-    - ``stats_sample`` < 1: filter ``wt`` itself by doc hash. Still
-      unbiased, but the sampled frame's lineage includes the full
-      corpus weighting, so it saves row volume, not the scan.
-
-    Either way the chosen plan recomputes the full term relation
-    inside one Catalyst plan, where AQE reuses shuffle exchanges
-    across its branches — no forced materialization of ``wt``. The
-    stats reduce to ONE collect (the two aggregate branches meet in a
-    1-row cross join).
-
-    ``plan`` ("naive"/"prefix") skips the Spark stats entirely — the
-    caller already decided, e.g. via the driver-side
-    estimate_cosine_plan over a fixed-size doc sample (one cheap
-    TakeOrdered job instead of a multi-stage stats DAG; the fast path
-    the registered query uses, since locally the Spark stats job is
-    stage-latency-bound, not volume-bound).
-
-    ``stats_cache`` (round-5 verdict nit #4): a caller-owned dict that
-    memoizes the COLLECTED posting/block stats, so repeated adaptive
-    calls over the same logical input pay the stats job once — an
-    engine's ANALYZE-statistics lifetime, owned by the caller because
-    only the caller knows when the underlying table changed (a
-    DataFrame has no content fingerprint that doesn't cost a job).
-    Keyed by (threshold, blocks, stats_sample, caller-stats?) so stats
-    collected under one sampling configuration never answer a call made
-    under another; pass one dict per (table, column) input, reuse it
-    across calls, drop it on data change. The cache never invalidates
-    itself if the underlying table changes within a session — that is
-    the caller's contract (ANALYZE lifetime), same as engine statistics.
-    """
-    blocks = list(block_cols)
-    if plan in ("naive", "prefix"):
-        if decision_out is not None:
-            decision_out.update({"plan": plan, "source": "caller"})
-        if plan == "naive":
-            return cosine_naive_join(
-                wt,
-                id_col=id_col,
-                token_col=token_col,
-                weight_col=weight_col,
-                threshold=threshold,
-                block_cols=blocks,
-            )
-        return cosine_prefix_join(
-            wt,
-            id_col=id_col,
-            token_col=token_col,
-            weight_col=weight_col,
-            threshold=threshold,
-            block_cols=blocks,
-        )
-    p = stats_sample
-    if stats_wt is not None:
-        swt, p = stats_wt, 1.0
-    elif p < 1.0:
-        swt = wt.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(10000)) < int(p * 10000)
-        )
-    else:
-        swt = wt
-    heavy_s = _heavy_terms(
-        swt,
-        id_col=id_col,
-        token_col=token_col,
-        weight_col=weight_col,
-        threshold=threshold,
-        block_cols=blocks,
-    )
-    cnt = swt.groupBy(*blocks, token_col).agg(F.count("*").alias("cnt"))
-    hcnt = heavy_s.groupBy(*blocks, token_col).agg(F.count("*").alias("hcnt"))
-    posting_stats = (
-        cnt.join(hcnt, [*blocks, token_col], "left")
-        .select(
-            "cnt",
-            (F.col("cnt") * (F.col("cnt") - F.lit(1))).alias("pair_rows"),
-            (
-                F.coalesce(F.col("hcnt"), F.lit(0)) * (F.col("cnt") - F.lit(1))
-            ).alias("cand_rows"),
-        )
-        .agg(
-            F.sum("cnt").alias("n_rows"),
-            F.sum("pair_rows").alias("pair_rows"),
-            F.sum("cand_rows").alias("cand_rows"),
-        )
-    )
-    block_stats = (
-        swt.groupBy(*blocks)
-        .agg(F.countDistinct(id_col).alias("n"))
-        .agg(
-            F.sum("n").alias("n_docs"),
-            F.sum(F.col("n") * (F.col("n") - F.lit(1)) / F.lit(2)).alias(
-                "block_pairs"
-            ),
-        )
-    )
-    # 1-row x 1-row cross join: both aggregate branches run in one job.
-    # The key carries the SAMPLING configuration too (p and whether the
-    # caller supplied its own stats frame): stats collected under one
-    # sample must not answer a call made under another (round-6 ADVICE).
-    _ck = (float(threshold), tuple(blocks), float(p), stats_wt is not None)
-    if stats_cache is not None and _ck in stats_cache:
-        stats = stats_cache[_ck]
-    else:
-        stats = posting_stats.crossJoin(block_stats).collect()[0].asDict()
-        if stats_cache is not None:
-            stats_cache[_ck] = stats
-    # decision compares p^2-scaled quantities on both sides, so the
-    # sample-space numbers are used directly; telemetry is unscaled.
-    pair_rows = stats["pair_rows"] or 0
-    cand_rows = stats["cand_rows"] or 0
-    n_docs = stats["n_docs"] or 1
-    block_pairs = float(stats["block_pairs"] or 0)
-    tokens_per_doc = (stats["n_rows"] or 0) / n_docs
-    est_naive = pair_rows / 2.0
-    pairs_ub = min(float(cand_rows), block_pairs)
-    est_prefix = cand_rows + pairs_ub * (tokens_per_doc + 2.0)
-    plan = "naive" if est_naive < est_prefix else "prefix"
-    if decision_out is not None:
-        scale = 1.0 / (p * p)
-        decision_out.update(
-            {
-                "plan": plan,
-                "stats_sample": p,
-                "est_naive": est_naive * scale,
-                "est_prefix": est_prefix * scale,
-                "pair_rows": int(pair_rows * scale),
-                "cand_rows": int(cand_rows * scale),
-                "block_pairs": block_pairs * scale,
-                "tokens_per_doc": tokens_per_doc,
-            }
-        )
-    if plan == "naive":
-        return cosine_naive_join(
-            wt,
-            id_col=id_col,
-            token_col=token_col,
-            weight_col=weight_col,
-            threshold=threshold,
-            block_cols=blocks,
-        )
-    return cosine_prefix_join(
-        wt,
-        id_col=id_col,
-        token_col=token_col,
-        weight_col=weight_col,
-        threshold=threshold,
-        block_cols=blocks,
-    )
 
 
 # Seed for the simhash plane-family affine hashes (distinct from the

@@ -779,79 +779,30 @@ def _prefix_len(sz: Column, threshold: float) -> Column:
     return (sz - req + F.lit(1)).cast("int")
 
 
-def jaccard_prefix_candidates(
-    docs: DataFrame, *, threshold: float, order: str = "hash",
-    max_df: int | None = None,
-) -> DataFrame:
+def jaccard_prefix_candidates(docs: DataFrame, *, threshold: float) -> DataFrame:
     """Candidate (a_id, b_id) pairs for the prefix-filtered Jaccard
     join, from a ``(__id, __h: sorted array<long>)`` frame.
 
-    ``order`` picks the global shingle order the prefixes live under:
-
-    - ``"hash"`` — the sorted hash array itself: prefix = slice, zero
-      extra shuffles; frequent shingles stay in prefixes with
-      probability ~(1-t), so fan-out shrinks by (1-t)^2 but remains
-      quadratic in shingle frequency. Right when skew is benign.
-    - ``"df"`` — ascending document frequency (the Vernica SIGMOD'10
-      order): costs a global count + join + per-doc rank (3 extra
-      shuffles), but the frequent shingles land at the END of the
-      order and drop out of every long-enough document's prefix —
-      candidate fan-out stops being quadratic in df. Right at 100 TB
-      or any adversarial corpus (boilerplate, templated text).
-
-    Both orders are total and globally consistent, so the prefix
-    theorem and the positional filter hold for either.
-
-    ``max_df`` (default off) is the boilerplate hard-stop SKEW.md
-    measures: prefix rows whose shingle occurs in more than ``max_df``
-    prefixes are dropped BEFORE the self-join, bounding every
-    per-shingle fan-out term to C(max_df, 2) regardless of corpus
-    pathology. This is a RECALL trade, not exact: a true pair whose
-    every prefix collision lands on dropped boilerplate shingles is
-    missed (the df order already pushes boilerplate out of prefixes
-    organically — max_df is the guarantee on top, for corpora where
-    even mid-frequency templating overwhelms the join). df is counted
-    over PREFIX occurrences — exactly the population that enters the
-    join, i.e. the quantity that drives fan-out. Costs one extra
-    count + semi-join on the shingle key.
+    The global shingle order is the sorted hash array itself: prefix =
+    slice, zero extra shuffles. Frequent shingles stay in prefixes with
+    probability ~(1-t), so fan-out shrinks by (1-t)^2 but remains
+    quadratic in shingle frequency; on boilerplate-skewed corpora the
+    caller prunes the sets first (ngram_jaccard_pairs_prefix's
+    ``prune_df="auto"``, see :func:`df_pruned_shingles`).
     """
     sz = F.size(F.col("__h"))
     plen = _prefix_len(sz, threshold)
-    # *_outer + null-drop on every Generate over __h: __h is the full
-    # parse pipeline (or the pruned re-agg) — an INNER generate makes
+    # posexplode_outer + null-drop: __h is the full parse pipeline (or
+    # the pruned re-agg) — an INNER generate over an attribute makes
     # InferFiltersFromGenerate synthesize `size(__h-expr) > 0`, which
     # filter-pushdown then moves below the parse's repartition exchange,
     # re-running the whole tokenize+shingle per row on the raw scan's
     # few row-group-bearing tasks (round-11 zipf30 straggler finding).
-    if order == "hash":
-        pref = docs.select(
-            "__id",
-            sz.alias("sz"),
-            F.posexplode_outer(F.slice(F.col("__h"), 1, plen)).alias("pos", "sh"),
-        ).filter(F.col("sh").isNotNull())
-    elif order == "df":
-        sh = docs.select(
-            "__id", sz.alias("sz"), F.explode_outer("__h").alias("sh")
-        ).filter(F.col("sh").isNotNull())
-        freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-        ranked = sh.join(freq, "sh").withColumn(
-            "pos",
-            F.row_number().over(Window.partitionBy("__id").orderBy("df", "sh"))
-            - F.lit(1),
-        )
-        pref = ranked.filter(F.col("pos") < _prefix_len(F.col("sz"), threshold)).select(
-            "__id", "sz", "pos", "sh"
-        )
-    else:  # pragma: no cover - guard
-        raise ValueError(f"order must be 'hash' or 'df', got {order!r}")
-    if max_df is not None:
-        keep = (
-            pref.groupBy("sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("sh")
-        )
-        pref = pref.join(keep, "sh")
+    pref = docs.select(
+        "__id",
+        sz.alias("sz"),
+        F.posexplode_outer(F.slice(F.col("__h"), 1, plen)).alias("pos", "sh"),
+    ).filter(F.col("sh").isNotNull())
     l, r = pref.alias("l"), pref.alias("r")
     szs = F.col("l.sz") + F.col("r.sz")
     # PPJoin positional filter: J>=t needs overlap >= t/(1+t)*(|A|+|B|);
@@ -989,30 +940,26 @@ def budget_prune_decision(
     n_docs: int,
     df_hist: dict[int, int] | list[tuple[int, int]],
     **kw,
-) -> tuple[int, bool]:
-    """(bound, prune_needed) from one histogram — the single source of
-    truth for BOTH the driver-side skip decision and what
-    :func:`df_pruned_shingles` will actually filter (``__df > bound``).
-    Keeping the two predicates in one place means the strict '>' prune
-    semantics cannot silently drift between the driver's "is there
-    anything to prune" check and the relational filter (round-10
-    ADVICE)."""
+) -> tuple[int, int]:
+    """(bound, n_hot) from one histogram: n_hot is the exact number of
+    shingles with df > bound, so 0 means nothing to prune. The single
+    source of truth for BOTH the driver-side skip decision and the
+    route :func:`df_pruned_shingles` takes for its filter
+    (``__df > bound``). Keeping the predicate in one place means the
+    strict '>' prune semantics cannot silently drift between the
+    driver's "is there anything to prune" check and the relational
+    filter (round-10 ADVICE)."""
     bound = budget_prune_bound(n_docs, df_hist, **kw)
     items = df_hist.items() if isinstance(df_hist, dict) else df_hist
-    return bound, any(df > bound for df, _c in items)
-
-
-# literal-array ceiling for the driver-side hot-shingle list; beyond
-# this the pruning falls back to a distributed anti-join + re-agg
-_MAX_HOT_LITERAL = 20_000
+    return bound, sum(c for df, c in items if df > bound)
 
 
 def df_pruned_shingles(
     docs: DataFrame,
     bound: int,
     *,
-    occurrences: DataFrame | None = None,
-    df_frame: DataFrame | None = None,
+    df_frame: DataFrame,
+    n_hot: int,
 ) -> DataFrame:
     """Drop shingles whose corpus document frequency exceeds ``bound``
     from every document's shingle SET (docs = (__id, __h sorted
@@ -1020,87 +967,59 @@ def df_pruned_shingles(
 
     This changes the SIMILARITY SEMANTICS, deliberately: Jaccard is
     computed over content shingles only — shingle-level stopwording,
-    the same move C4/FineWeb-style curation makes before dedup. It is
-    NOT the prefix-occurrence ``max_df`` hard-stop (which keeps exact
-    sets and trades recall by dropping JOIN rows): pruning the sets
-    keeps the downstream join EXACT w.r.t. the pruned sets, so the
-    result is order-independent and a SQL twin can replay it without
-    reproducing Spark's hash order. Pairs that shared only boilerplate
-    drop to J=0; near-dups that differed only in boilerplate can GAIN
-    similarity — both are the intended reading at 100 TB.
+    the same move C4/FineWeb-style curation makes before dedup.
+    Pruning the sets keeps the downstream join EXACT w.r.t. the pruned
+    sets, so the result is order-independent and a SQL twin can replay
+    it without reproducing Spark's hash order. Pairs that shared only
+    boilerplate drop to J=0; near-dups that differed only in
+    boilerplate can GAIN similarity — both are the intended reading at
+    100 TB.
 
-    Plan: one aggregate over exploded 8-byte shingle hashes finds the
-    over-bound shingles — few by construction (sum df <= total rows R
-    means at most R/bound shingles exceed the bound). When the list
-    fits a literal (<= 20k entries) the prune is a zero-shuffle
-    array_except against a broadcast literal (one parsed F.expr — a
-    py4j F.lit(list) round-trips per element, PERF.md r4); an EMPTY
-    list short-circuits to the input unchanged. Bigger lists take the
-    distributed anti-join + re-agg fallback (two shuffles).
+    ``df_frame`` is the PERSISTED (sh, __df) per-shingle
+    document-frequency frame the caller's histogram was aggregated
+    from, so the expensive parse+explode+agg lineage runs ONCE across
+    the driver jobs instead of once per job (round-10 zipf30 repair:
+    the budget fix moved the bottleneck from candidate mass to repeated
+    lineage over the parse). ``n_hot`` is the exact number of its
+    shingles above ``bound``, read off that histogram
+    (:func:`budget_prune_decision`), so the route needs no size probe:
 
-    ``occurrences`` optionally supplies the one-row-per-(doc, shingle)
-    hashed-shingle frame the detection aggregates over — callers that
-    can produce it WITHOUT the array_sort the main pipeline needs
-    (ngram_jaccard_pairs_prefix) save that work in this branch. The
-    detection deliberately RECOMPUTES upstream lineage instead of
-    caching ``docs``: a localCheckpoint here measured slower overall
-    (4.6 vs 2.3 s at sf0.1) — the InMemoryTableScan of cached arrays
-    loses to parquet+codegen recompute and breaks the main plan's
-    exchange reuse across its three consumptions.
+    - n_hot <= ``partitioning._MAX_DRIVER_ROWS``: one plain parallel
+      collect of the hot list, bound into the plan as one parsed
+      array_except literal (a py4j F.lit(list) round-trips per
+      element, PERF.md r4) — zero shuffles.
+    - above it: the distributed anti-join + re-agg fallback (two
+      shuffles); the hot list (<= R/bound rows for R total shingle
+      rows) is localCheckpointed eagerly.
 
-    ``df_frame`` optionally supplies the (sh, __df) per-shingle
-    document-frequency frame itself — callers that already aggregated
-    it (the auto-bound detection's histogram) pass it PERSISTED, so
-    the expensive parse+explode+agg lineage runs ONCE across the
-    detection's driver jobs instead of once per job (round-10 zipf30
-    repair: the budget fix moved the bottleneck from candidate mass
-    to repeated lineage over the parse). Narrow by construction (one
-    16-byte row per distinct shingle). This function unpersists it as
-    soon as the prune list is bound into the plan as a literal (or no
-    pruning applies); on the >20k distributed-fallback path the hot
-    list is localCheckpointed (small: <= R/bound rows) and the wide
-    frame released immediately, so no session-lifetime cache of the
-    full df relation survives either path.
+    Either way ``df_frame`` is unpersisted before returning, so no
+    session-lifetime cache of the full df relation survives.
     """
-    if df_frame is None:
-        if occurrences is None:
-            # *_outer + null-drop: see ngram_jaccard_pairs (round-11)
-            occurrences = docs.select(
-                F.explode_outer("__h").alias("sh")
-            ).filter(F.col("sh").isNotNull())
-        df_frame = occurrences.groupBy("sh").agg(F.count("*").alias("__df"))
+    from firmable_aus_etl_spark.operators import partitioning
+
     sh_df = df_frame.filter(F.col("__df") > bound).select("sh")
-    hot_rows = sh_df.limit(_MAX_HOT_LITERAL + 1).collect()
-    _lvl = df_frame.storageLevel
-    _cached = _lvl.useMemory or _lvl.useDisk
-    if not hot_rows:
-        if _cached:
-            df_frame.unpersist(False)
-        return docs
-    if len(hot_rows) <= _MAX_HOT_LITERAL:
-        if _cached:
-            df_frame.unpersist(False)
-        arr_sql = "array(" + ",".join(
-            f"{r['sh']}L" for r in sorted(hot_rows, key=lambda r: r["sh"])
-        ) + ")"
+    if n_hot <= partitioning._MAX_DRIVER_ROWS:
+        hot = sorted(r["sh"] for r in sh_df.collect())
+        df_frame.unpersist(False)
+        if not hot:
+            return docs
+        arr_sql = "array(" + ",".join(f"{h}L" for h in hot) + ")"
         return docs.select(
             "__id",
             F.array_sort(
                 F.array_except(F.col("__h"), F.expr(arr_sql))
             ).alias("__h"),
         )
-    if _cached:
-        # round-10 ADVICE: the fallback previously kept the WHOLE
-        # df_frame persisted for the session because the returned
-        # plan's anti-join read sh_df through it — a slow leak (one
-        # row per distinct shingle). Materialize just the hot list
-        # (<= R/bound rows, 8 bytes each) via an eager localCheckpoint
-        # and release the wide frame immediately; the surviving cache
-        # entry is the small relation the anti-join actually needs.
-        # (localCheckpoint is not fault-tolerant — acceptable on a
-        # rare fallback path whose loss just re-runs the query.)
-        sh_df = sh_df.localCheckpoint(eager=True)
-        df_frame.unpersist(False)
+    # round-10 ADVICE: the returned plan's anti-join reads sh_df, so
+    # keeping df_frame persisted for it would leak one row per distinct
+    # shingle for the session. Materialize just the hot list (8 bytes
+    # per row) via an eager localCheckpoint and release the wide frame;
+    # the surviving cache entry is the small relation the anti-join
+    # actually needs. (localCheckpoint is not fault-tolerant —
+    # acceptable on a rare fallback path whose loss just re-runs the
+    # query.)
+    sh_df = sh_df.localCheckpoint(eager=True)
+    df_frame.unpersist(False)
     # *_outer + null-drop: see ngram_jaccard_pairs (round-11). NOTE the
     # semantics nuance on THIS site: an inner explode would DROP docs
     # whose shingle set is empty, and the re-agg would lose them — the
@@ -1124,7 +1043,7 @@ def df_pruned_shingles(
     # and serves the other three readers from storage; narrow rows
     # (id + pruned hash array), ContextCleaner-collected when the frame
     # goes out of scope (no session-lifetime CacheManager entry). Only
-    # this >20k-hot-list path pays it — the literal path (every driver
+    # this over-ceiling path pays it — the literal path (every driver
     # SF) keeps its zero-materialization shape.
     return pruned.localCheckpoint(eager=False)
 
@@ -1136,9 +1055,7 @@ def ngram_jaccard_pairs_prefix(
     *,
     shingle_n: int = 3,
     threshold: float = 0.8,
-    order: str = "hash",
-    max_df: int | None = None,
-    prune_df: int | str | None = None,
+    prune_df: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via prefix filtering (PPJoin/Vernica).
 
@@ -1146,27 +1063,26 @@ def ngram_jaccard_pairs_prefix(
     cheaper: under any global total order on shingles, a pair with
     J >= t must collide within the first ``|s| - ceil(t*|s|) + 1``
     shingles of each side, so only those prefixes enter the
-    inverted-index join — see :func:`jaccard_prefix_candidates` for
-    the ``order`` trade-off (shuffle-free "hash" vs skew-proof "df")
-    and the ``max_df`` boilerplate hard-stop (a documented recall
-    trade — with it set the result can be a SUBSET of the exact set).
-    Length and positional filters prune candidates before exact
-    verification on the full distinct-shingle arrays.
+    inverted-index join (:func:`jaccard_prefix_candidates`, hash
+    order). Length and positional filters prune candidates before
+    exact verification on the full distinct-shingle arrays.
 
-    ``prune_df`` (round-7): drop shingles with corpus df > bound from
-    the shingle SETS before the join — shingle-level stopwording (see
-    :func:`df_pruned_shingles` for semantics vs ``max_df``).
-    ``"auto"`` derives the bound from corpus stats via
-    :func:`budget_prune_bound` (round-10: isqrt detection + kept-mass
-    budget — the plain isqrt bound's kept candidate mass measured
-    ~n^1.45 at decade 3; the budget form is Theta(n) by construction
-    and IDENTICAL to isqrt whenever no df ∝ n regime exists, which
-    covers every driver fixture). The rule is SQL-replayable (integer
-    histogram + window cumulative sum), so the data-dependent sizing
-    itself sits under an oracle hash gate. Costs one count job + one
-    df-histogram aggregate; the join stays exact w.r.t. the pruned
-    sets.
+    ``prune_df="auto"`` (round-7) is the skew lever: drop shingles
+    with corpus df > bound from the shingle SETS before the join —
+    shingle-level stopwording (see :func:`df_pruned_shingles`). The
+    bound comes from corpus stats via :func:`budget_prune_bound`
+    (round-10: isqrt detection + kept-mass budget — the plain isqrt
+    bound's kept candidate mass measured ~n^1.45 at decade 3; the
+    budget form is Theta(n) by construction and IDENTICAL to isqrt
+    whenever no df ∝ n regime exists, which covers every driver
+    fixture). The rule is SQL-replayable (integer histogram + window
+    cumulative sum), so the data-dependent sizing itself sits under an
+    oracle hash gate. Costs one count job + one df-histogram
+    aggregate; the join stays exact w.r.t. the pruned sets. ``None``
+    (the default) prunes nothing; any other value raises ValueError.
     """
+    if prune_df not in (None, "auto"):
+        raise ValueError(f"prune_df must be None or 'auto', got {prune_df!r}")
     # shingle_frame repartitions first (single-file inputs would run the
     # HOF on one core); immediately collapse each distinct-shingle set
     # to a SORTED array<long> of xxhash64 values — strings never leave
@@ -1181,59 +1097,50 @@ def ngram_jaccard_pairs_prefix(
         "__id",
         F.array_sort(F.transform(F.col("__sh"), lambda s: F.xxhash64(s))).alias("__h"),
     )
-    if prune_df is not None:
+    if prune_df == "auto":
         # detection branch skips the array_sort (df needs multiplicity,
-        # not order) and recomputes lineage instead of caching — see
-        # df_pruned_shingles for the measured trade
+        # not order) and recomputes the parse instead of caching docs
+        # (PERF.md decision 29). The per-shingle df frame is persisted
+        # across the detection's readers (round-10 zipf30 repair): the
+        # histogram job below materializes it in ONE
+        # parse+explode+agg pass, and on the boilerplate path the
+        # hot-list collect and the returned plan's anti-join read the
+        # cache instead of re-running that straggler-bound lineage
+        # (measured: one extra parse pass costs ~230 s of a ~1030 s
+        # query at zipf30). Narrow (16 bytes per distinct shingle),
+        # spillable.
         # *_outer + null-drop: see ngram_jaccard_pairs (round-11)
+        from pyspark import StorageLevel
+
         occ = shf.select(
             F.explode_outer(
                 F.transform(F.col("__sh"), lambda s: F.xxhash64(s))
             ).alias("sh")
         ).filter(F.col("sh").isNotNull())
-        if prune_df == "auto":
-            # per-shingle df frame persisted across the detection's
-            # readers (round-10 zipf30 repair): the histogram job
-            # below materializes it in ONE parse+explode+agg pass,
-            # and on the boilerplate path the hot-list collect and
-            # the returned plan's anti-join read the cache instead
-            # of re-running that straggler-bound lineage (measured:
-            # one extra parse pass costs ~230 s of a ~1030 s query
-            # at zipf30). Narrow (16 bytes/distinct shingle),
-            # spillable.
-            from pyspark import StorageLevel
-
-            dfs = (
-                occ.groupBy("sh")
-                .agg(F.count("*").alias("__df"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # df histogram: tiny relation (one row per distinct df
-            # value), collected to derive the budget bound in exact
-            # integer arithmetic; the SQL twin replays the identical
-            # computation relationally (window cumulative sum). The
-            # histogram alone also DECIDES whether any shingle sits
-            # above the bound, so on corpora with no boilerplate
-            # regime (every driver fixture) detection ends here —
-            # no hot-list job (the round-10 bench A/B put the
-            # hot-list-job-always shape at ~0.2 s of a 1.6 s query
-            # at sf0.1).
-            hist = (
-                dfs.groupBy("__df").agg(F.count("*").alias("__cnt")).collect()
-            )
-            bound, prune_needed = budget_prune_decision(
-                df.count(), [(r["__df"], r["__cnt"]) for r in hist]
-            )
-            if prune_needed:
-                docs = df_pruned_shingles(docs, bound, df_frame=dfs)
-            else:
-                dfs.unpersist(False)
+        dfs = (
+            occ.groupBy("sh")
+            .agg(F.count("*").alias("__df"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # df histogram: tiny relation (one row per distinct df value),
+        # collected to derive the budget bound in exact integer
+        # arithmetic; the SQL twin replays the identical computation
+        # relationally (window cumulative sum). The histogram alone
+        # also counts the shingles above the bound, so on corpora with
+        # no boilerplate regime (every driver fixture) detection ends
+        # here — no hot-list job (the round-10 bench A/B put the
+        # hot-list-job-always shape at ~0.2 s of a 1.6 s query at
+        # sf0.1) — and otherwise the count picks df_pruned_shingles'
+        # route without a probe.
+        hist = dfs.groupBy("__df").agg(F.count("*").alias("__cnt")).collect()
+        bound, n_hot = budget_prune_decision(
+            df.count(), [(r["__df"], r["__cnt"]) for r in hist]
+        )
+        if n_hot:
+            docs = df_pruned_shingles(docs, bound, df_frame=dfs, n_hot=n_hot)
         else:
-            bound = int(prune_df)
-            docs = df_pruned_shingles(docs, bound, occurrences=occ)
-    cand = jaccard_prefix_candidates(
-        docs, threshold=threshold, order=order, max_df=max_df
-    )
+            dfs.unpersist(False)
+    cand = jaccard_prefix_candidates(docs, threshold=threshold)
     a = docs.select(F.col("__id").alias("a_id"), F.col("__h").alias("__h_a"))
     b = docs.select(F.col("__id").alias("b_id"), F.col("__h").alias("__h_b"))
     inter = F.size(F.array_intersect(F.col("__h_a"), F.col("__h_b"))).cast("double")
@@ -1296,7 +1203,7 @@ def connected_components(
       diameter-many rounds at 100 TB.
 
     Small graphs finish on the driver: when the materialized edge set
-    has at most ``partitioning._MAX_DRIVER_EDGES`` rows, the size probe
+    has at most ``partitioning._MAX_DRIVER_ROWS`` rows, the size probe
     that found out has already fetched it, and union-find returns the
     same labeling as a local relation (plus the ``nodes`` singletons).
     At sf0.01 this replaces a loop whose every round is AQE stage jobs

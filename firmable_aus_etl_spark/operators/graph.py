@@ -12,10 +12,10 @@ Scale shape: triangle counting is the canonical two-join pattern
 reducer", WWW'11): with edges oriented low-id -> high-id, every wedge
 is enumerated once at its lowest vertex and closed with ONE more
 equi-join probe against the edge set — no node ever sees more than
-its out-degree^2 wedge rows, and orienting by id (or by degree for
-adversarial skew) keeps hub fan-out bounded. Both joins are plain
+its out-degree^2 wedge rows, and orienting by degree keeps hub
+fan-out bounded even under adversarial skew. Both joins are plain
 shuffles on vertex keys; no driver-side adjacency is built for edge
-sets above partitioning._MAX_DRIVER_EDGES (graph_summary finishes
+sets above partitioning._MAX_DRIVER_ROWS (graph_summary finishes
 smaller ones on the driver).
 """
 
@@ -138,34 +138,27 @@ def _degree_directed(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame, *, orient: str = "degree") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Count triangles in a simple undirected edge frame (a, b), a < b.
 
     Wedges are enumerated once at their lowest-RANK vertex and closed
     with one equi-join probe against the directed edge set — each
     triangle counted exactly once (Suri-Vassilvitskii node-iterator).
 
-    ``orient="degree"`` (default) ranks vertices by (degree, id):
-    out-degrees are bounded by ~sqrt(2m), so a hub with degree d
-    generates O(m) wedge rows instead of the O(d^2) an id-ranked
-    orientation suffers when the hub draws a low id — the property
-    that survives power-law graphs at 100 TB (wedge-row counts
-    measured in tests). ``orient="id"`` skips the degree pass (one
-    aggregation + two joins cheaper) — fine when degrees are known
-    to be bounded. Both count identically. Returns a 1-row frame
+    Vertices are ranked by (degree, id): out-degrees are bounded by
+    ~sqrt(2m), so a hub with degree d generates O(m) wedge rows instead
+    of the O(d^2) an id-ranked orientation suffers when the hub draws a
+    low id — the property that survives power-law graphs at 100 TB
+    (wedge-row counts measured in tests). Returns a 1-row frame
     ``(n_triangles)``.
     """
-    if orient == "id":
-        d = edges.select(F.col("a").alias("u"), F.col("b").alias("v"), F.col("b").alias("__r"))
-    else:
-        # the directed frame feeds three branches (both wedge sides and
-        # the closing probe) and its degree join re-reads the edge
-        # input twice more — materialize it once instead of
-        # re-executing the (possibly expensive) upstream per branch
-        # (PERF decision 13: every frame referenced by multiple
-        # branches of one job must be materialized)
-        dd = _degree_directed(edges).localCheckpoint(eager=False)
-        d = dd.select("u", "v", F.struct("dv", "v").alias("__r"))
+    # the directed frame feeds three branches (both wedge sides and the
+    # closing probe) and its degree join re-reads the edge input twice
+    # more — materialize it once instead of re-executing the (possibly
+    # expensive) upstream per branch (PERF decision 13: every frame
+    # referenced by multiple branches of one job must be materialized)
+    dd = _degree_directed(edges).localCheckpoint(eager=False)
+    d = dd.select("u", "v", F.struct("dv", "v").alias("__r"))
     e1 = d.select(F.col("u"), F.col("v").alias("y"), F.col("__r").alias("__ry"))
     e2 = d.select(F.col("u"), F.col("v").alias("z"), F.col("__r").alias("__rz"))
     wedges = (
@@ -188,7 +181,7 @@ def graph_summary(pairs: DataFrame, src: str = "a", dst: str = "b") -> DataFrame
     self-join) from scratch.
 
     Small graphs finish on the driver: when the simple edge set has at
-    most ``partitioning._MAX_DRIVER_EDGES`` rows, the size probe that
+    most ``partitioning._MAX_DRIVER_ROWS`` rows, the size probe that
     found out has already fetched it, and the four counts are computed
     locally (the same degree sums, and the same degree-ordered triangle
     enumeration as triangle_count). Both routes apply one

@@ -113,23 +113,24 @@ def iter_release(df: DataFrame, checkpoint_dir: str | None) -> None:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-# Largest edge set a graph operator finishes on the driver
-# (dedup.connected_components, graph.graph_summary) — the same ceiling
-# as dedup._MAX_HOT_LITERAL. Union-find over 20k edges took <= 22 ms
-# and the degree-ordered triangle count <= 64 ms (PERF.md).
-_MAX_DRIVER_EDGES = 20_000
+# Most rows an operator brings to the driver: the edge set a graph
+# operator finishes there (dedup.connected_components,
+# graph.graph_summary) and the hot-shingle list dedup.df_pruned_shingles
+# binds into its plan as one literal. Union-find over 20k edges took
+# <= 22 ms and the degree-ordered triangle count <= 64 ms (PERF.md).
+_MAX_DRIVER_ROWS = 20_000
 
 
 def collect_small(df: DataFrame, description: str) -> list | None:
-    """``df``'s rows if it has at most ``_MAX_DRIVER_EDGES`` of them,
+    """``df``'s rows if it has at most ``_MAX_DRIVER_ROWS`` of them,
     else None.
 
-    One ``limit(N + 1).collect()`` is both the size probe and the fetch
-    (the hot-list pattern of dedup.df_pruned_shingles), so a small
-    frame costs one job and a large one a bounded read. ``coalesce(1)``
-    keeps it one job: a bare limit takes partitions in growing waves,
-    one job each (3 on an ~8-partition edge frame), while one task
-    reading the partitions in turn still stops after N + 1 rows. Call
+    One ``limit(N + 1).collect()`` is both the size probe and the fetch,
+    so a small frame costs one job and a large one a bounded read.
+    ``coalesce(1)`` keeps it one job: a bare limit takes partitions in
+    growing waves, one job each (3 on an ~8-partition edge frame), while
+    one task reading the partitions in turn still stops after N + 1
+    rows. Call
     it on a materialized frame: the route that does not fit reads the
     same blocks instead of recomputing them. The job runs under
     ``description`` so traces name it; the thread's previous job
@@ -139,20 +140,30 @@ def collect_small(df: DataFrame, description: str) -> list | None:
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(description)
     try:
-        rows = df.coalesce(1).limit(_MAX_DRIVER_EDGES + 1).collect()
+        rows = df.coalesce(1).limit(_MAX_DRIVER_ROWS + 1).collect()
     finally:
         sc.setLocalProperty("spark.job.description", prev)
-    return rows if len(rows) <= _MAX_DRIVER_EDGES else None
+    return rows if len(rows) <= _MAX_DRIVER_ROWS else None
 
 
-def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
-    """A frame of driver-side ``rows`` (tuples in ``schema`` order).
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` may be a DDL string).
 
     Goes through pandas so that, with Arrow on (session.py), Spark
     plans a LocalRelation: a plain list becomes an RDD whose scan
     starts a Python worker, which measured 0.6-0.9 s against 0.25-0.4 s
-    for the noop sink of 40k rows.
+    for the noop sink of 40k rows. An empty pandas frame skips Arrow
+    and plans that RDD too, so no rows go in as an empty Arrow table.
     """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not rows:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     import pandas as pd
 
     return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)

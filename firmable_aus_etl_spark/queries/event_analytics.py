@@ -419,9 +419,10 @@ def q_orderkey_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         for a, b in zip(bounds, bounds[1:])
         if b["lo"] - a["hi"] > 1
     ]
-    cross = spark.createDataFrame(
-        cross_rows,
-        schema="gap_start bigint, gap_end bigint, missing bigint",
+    from firmable_aus_etl_spark.operators.partitioning import local_frame
+
+    cross = local_frame(
+        spark, cross_rows, "gap_start bigint, gap_end bigint, missing bigint"
     )
     return intra.unionByName(cross)
 

@@ -415,8 +415,10 @@ def q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in counts:
         offsets[int(r["__bkt"])] = acc
         acc += int(r["cnt"])
-    off_df = spark.createDataFrame(
-        [(b, o) for b, o in offsets.items()], schema="__bkt bigint, __off bigint"
+    from firmable_aus_etl_spark.operators.partitioning import local_frame
+
+    off_df = local_frame(
+        spark, list(offsets.items()), "__bkt bigint, __off bigint"
     )
     wl = Window.partitionBy("__bkt").orderBy(F.col("cents").desc(), "o_custkey")
     ranked = (

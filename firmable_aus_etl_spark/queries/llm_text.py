@@ -1217,20 +1217,10 @@ SELECT a_id, b_id, round(cosine, 6) AS cosine FROM r WHERE rn = 1
 """
 
 
-def _tfidf_weight_frame(
-    spark: SparkSession, sf_dir: str, doc_sample: float | None = None
-) -> DataFrame:
+def _tfidf_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse TF-IDF term relation (doc_id, source, lang, t, wt) with
     tf * (1/df) weights — shared by the naive and prefix-filtered
-    cosine joins so both score from identical inputs.
-
-    ``doc_sample`` builds the frame over a deterministic hash-sample
-    of the documents with IN-SAMPLE df — the cheap stats input for
-    cosine_join_adaptive's dispatch (its lineage touches only the
-    sampled docs, so the stats pass costs one p-fraction scan, not a
-    full-corpus weighting). In-sample df ~= p*df uniformly, and the
-    heavy-prefix condition is invariant to uniform weight scaling, so
-    the dispatch estimates are faithful."""
+    cosine joins so both score from identical inputs."""
     from firmable_aus_etl_spark.functions.similarity import normalize_name
 
     # repartition before tokenize: the single-file input would run the
@@ -1239,11 +1229,6 @@ def _tfidf_weight_frame(
     from firmable_aus_etl_spark.operators.partitioning import ensure_parallelism
 
     docs = load_table(spark, sf_dir, "documents")
-    if doc_sample is not None:
-        docs = docs.filter(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(10000))
-            < int(doc_sample * 10000)
-        )
     # tokens are IDENTITY keys only (tf/df grouping, the inverted-index
     # join); the output never carries one — so they leave the map stage
     # as xxhash64 longs and every downstream shuffle (tf, df, wt join,
@@ -1275,7 +1260,7 @@ def q_tfidf_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """op22 DEFAULT — TF-IDF cosine similarity join (reference:
     entity_matching.py:45-62, threshold 0.7 at :56) through
     STATS-BASED ADAPTIVE DISPATCH (operators/cosine_join.py
-    cosine_join_adaptive; reference analog:
+    estimate_cosine_plan; reference analog:
     entity_matching_optimized.py:312's size-based matcher dispatch):
     posting-list statistics pick between (a) the AllPairs L2-suffix
     prefix plan — heavy head tokens index the join, pruning the
@@ -1292,7 +1277,8 @@ def q_tfidf_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine rounded to 6 (sum order differs across engines)."""
     from firmable_aus_etl_spark.functions.similarity import normalize_name
     from firmable_aus_etl_spark.operators.cosine_join import (
-        cosine_join_adaptive,
+        cosine_naive_join,
+        cosine_prefix_join,
         estimate_cosine_plan,
     )
 
@@ -1323,15 +1309,14 @@ def q_tfidf_cosine_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dec = table_stat(sf_dir, "documents", "tfidf_plan", plan)
 
-    wt = _tfidf_weight_frame(spark, sf_dir)
-    pairs = cosine_join_adaptive(
-        wt,
+    join = cosine_naive_join if dec["plan"] == "naive" else cosine_prefix_join
+    pairs = join(
+        _tfidf_weight_frame(spark, sf_dir),
         id_col="doc_id",
         token_col="t",
         weight_col="wt",
         threshold=0.7,
         block_cols=["source", "lang"],
-        plan=dec["plan"],
     )
     cos = pairs.select(
         "a_id",
@@ -2185,12 +2170,11 @@ def q_bm25_search_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference: the serving extension of entity_matching_tfidf.py's
     corpus matcher; SURVEY §4 similarity-search family (text sibling
     of ann_cosine_top3_per_label)."""
+    from firmable_aus_etl_spark.operators.partitioning import local_frame
     from firmable_aus_etl_spark.operators.retrieval import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        _BM25_QUERIES, "query_id string, qtext string"
-    )
+    queries = local_frame(spark, _BM25_QUERIES, "query_id string, qtext string")
     return bm25_topk(
         docs, queries,
         id_col="doc_id", text_col="text",

@@ -40,6 +40,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from firmable_aus_etl_spark.operators.dedup import shingle_frame
+from firmable_aus_etl_spark.operators.partitioning import local_frame
 
 BANDS = 16
 NUM_HASHES = 32
@@ -151,7 +152,7 @@ def _stage_signatures(
     if history_dirs:
         seen_sigs = spark.read.parquet(*history_dirs)
     else:
-        seen_sigs = spark.createDataFrame([], new_sigs.schema)
+        seen_sigs = local_frame(spark, [], new_sigs.schema)
     return new_sigs, seen_sigs
 
 
@@ -169,7 +170,7 @@ def _commit_survivors(
     ``~isin``: null-id rows survive, as they match no dropped id.
     Returns (batch rows, dropped rows)."""
     ids = [tuple(r) for r in drops.collect()]
-    dropped = spark.createDataFrame(ids, batch.select(id_col).schema)
+    dropped = local_frame(spark, ids, batch.select(id_col).schema)
     survivors = batch.join(dropped, id_col, "left_anti")
     survivors.write.mode("overwrite").parquet(corpus_dir)
     return batch.count(), len(ids)
@@ -1055,7 +1056,7 @@ def span_view_increment(
             "g", F.col("nd").alias("nd_prev")
         )
         if parent is not None
-        else spark.createDataFrame([], "g string, nd_prev long"),
+        else local_frame(spark, [], "g string, nd_prev long"),
         "g",
         "left",
     ).select("g", "nd", F.coalesce("nd_prev", F.lit(0)).alias("nd_prev"))

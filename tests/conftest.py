@@ -24,4 +24,4 @@ def distributed_graph_route(monkeypatch):
     driver ceiling at -1 no edge set fits, not even an empty one."""
     from firmable_aus_etl_spark.operators import partitioning
 
-    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", -1)
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", -1)

@@ -163,42 +163,30 @@ def _sparse_corpus():
     return docs
 
 
-def test_adaptive_dispatch_picks_naive_on_dense(spark):
-    from firmable_aus_etl_spark.operators.cosine_join import cosine_join_adaptive
+def _estimate(corpus):
+    from firmable_aus_etl_spark.operators.cosine_join import estimate_cosine_plan
 
-    dec = {}
-    cosine_join_adaptive(
-        _weighted(spark, _dense_corpus()),
-        id_col="doc_id",
-        token_col="t",
-        weight_col="wt",
-        threshold=0.7,
-        decision_out=dec,
+    return estimate_cosine_plan(
+        [((), text.split()) for _, text in corpus], threshold=0.7
     )
+
+
+def test_adaptive_dispatch_picks_naive_on_dense():
+    dec = _estimate(_dense_corpus())
     assert dec["plan"] == "naive", dec
 
 
-def test_adaptive_dispatch_picks_prefix_on_sparse(spark):
-    from firmable_aus_etl_spark.operators.cosine_join import cosine_join_adaptive
-
-    dec = {}
-    cosine_join_adaptive(
-        _weighted(spark, _sparse_corpus()),
-        id_col="doc_id",
-        token_col="t",
-        weight_col="wt",
-        threshold=0.7,
-        decision_out=dec,
-    )
+def test_adaptive_dispatch_picks_prefix_on_sparse():
+    dec = _estimate(_sparse_corpus())
     assert dec["plan"] == "prefix", dec
     assert dec["cand_rows"] < dec["pair_rows"] / 2
 
 
 def test_adaptive_matches_both_fixed_plans_on_both_regimes(spark):
-    """Dispatch is physical planning only: adaptive == prefix == naive
-    row-for-row on both corpus shapes (6-decimal cosine)."""
+    """The adaptive plan choice is physical planning only: the two
+    plans it picks between, prefix and naive, agree row-for-row on
+    both corpus shapes (6-decimal cosine)."""
     from firmable_aus_etl_spark.operators.cosine_join import (
-        cosine_join_adaptive,
         cosine_naive_join,
         cosine_prefix_join,
     )
@@ -213,38 +201,39 @@ def test_adaptive_matches_both_fixed_plans_on_both_regimes(spark):
                 for r in df.collect()
             )
 
-        got = rows(cosine_join_adaptive(wt, **kw))
-        assert got == rows(cosine_prefix_join(wt, **kw))
+        got = rows(cosine_prefix_join(wt, **kw))
         assert got == rows(cosine_naive_join(wt, **kw))
         assert got, "fixture produced no pairs - test is vacuous"
 
 
 def test_driver_estimator_agrees_with_spark_stats(spark):
-    """estimate_cosine_plan (pure-Python, driver-side) must reach the
-    same decision as the exact Spark-side stats on both regimes — it
-    mirrors the same weighting, heavy-prefix marking, and cost model."""
-    from firmable_aus_etl_spark.operators.cosine_join import (
-        cosine_join_adaptive,
-        estimate_cosine_plan,
-    )
+    """estimate_cosine_plan (pure-Python, driver-side) must count the
+    same posting pair rows and heavy-prefix candidate rows as Spark
+    aggregates over the same weighting and the prefix join's own
+    heavy-prefix marking (_heavy_terms), on both regimes."""
+    from firmable_aus_etl_spark.operators.cosine_join import _heavy_terms
 
     for corpus in (_dense_corpus(), _sparse_corpus()):
-        spark_dec = {}
-        cosine_join_adaptive(
-            _weighted(spark, corpus),
-            id_col="doc_id",
-            token_col="t",
-            weight_col="wt",
-            threshold=0.7,
-            decision_out=spark_dec,
+        wt = _weighted(spark, corpus)
+        heavy = _heavy_terms(
+            wt, id_col="doc_id", token_col="t", weight_col="wt",
+            threshold=0.7, block_cols=[],
         )
-        py_dec = estimate_cosine_plan(
-            [((), text.split()) for _, text in corpus], threshold=0.7
+        cnt = wt.groupBy("t").agg(F.count("*").alias("cnt"))
+        hcnt = heavy.groupBy("t").agg(F.count("*").alias("hcnt"))
+        stats = (
+            cnt.join(hcnt, "t", "left")
+            .agg(
+                F.sum(F.col("cnt") * (F.col("cnt") - 1)).alias("pair_rows"),
+                F.sum(
+                    F.coalesce(F.col("hcnt"), F.lit(0)) * (F.col("cnt") - 1)
+                ).alias("cand_rows"),
+            )
+            .collect()[0]
         )
-        assert py_dec["plan"] == spark_dec["plan"], (py_dec, spark_dec)
-        # the full-corpus estimator sees the exact same counts
-        assert py_dec["pair_rows"] == spark_dec["pair_rows"]
-        assert py_dec["cand_rows"] == spark_dec["cand_rows"]
+        py_dec = _estimate(corpus)
+        assert py_dec["pair_rows"] == stats["pair_rows"], (py_dec, stats)
+        assert py_dec["cand_rows"] == stats["cand_rows"], (py_dec, stats)
 
 
 def test_driver_estimator_heavy_marking_matches_spark_window(spark):
@@ -293,36 +282,6 @@ def test_driver_estimator_heavy_marking_matches_spark_window(spark):
                 if suffix >= 0.6 * 0.6 * total:
                     heavy_py.add((i, t))
         assert heavy_py == heavy_spark, f"seed {seed}"
-
-
-def test_adaptive_stats_cache_skips_stats_job(spark):
-    """Round-6 verdict #7: a caller-owned stats_cache memoizes the
-    collected posting stats — the second adaptive call over the same
-    input runs ZERO Spark jobs at plan-construction time and makes the
-    identical decision."""
-    from firmable_aus_etl_spark.operators.cosine_join import cosine_join_adaptive
-
-    wt = _weighted(spark, _dense_corpus())
-    cache: dict = {}
-    dec1: dict = {}
-    cosine_join_adaptive(
-        wt, id_col="doc_id", token_col="t", weight_col="wt",
-        threshold=0.7, decision_out=dec1, stats_cache=cache,
-    )
-    assert cache, "first call must populate the cache"
-
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    dec2: dict = {}
-    out = cosine_join_adaptive(
-        wt, id_col="doc_id", token_col="t", weight_col="wt",
-        threshold=0.7, decision_out=dec2, stats_cache=cache,
-    )
-    after = set(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "cached call must not run a stats job"
-    assert dec2["plan"] == dec1["plan"]
-    # the returned (lazy) frame still evaluates correctly
-    assert out.count() >= 0
 
 
 def test_weighted_simhash_candidates_python_parity(spark):

@@ -106,63 +106,18 @@ def test_prefix_jaccard_equals_naive(spark):
         docs_fixture(spark),
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
     ):
-        for t, order in ((0.5, "hash"), (0.7, "hash"), (0.5, "df")):
+        for t in (0.5, 0.7):
             naive = dedup.ngram_jaccard_pairs(
                 docs, "doc_id", "text", shingle_n=3, threshold=t
             )
             pref = dedup.ngram_jaccard_pairs_prefix(
-                docs, "doc_id", "text", shingle_n=3, threshold=t, order=order
+                docs, "doc_id", "text", shingle_n=3, threshold=t
             )
             n = {(r.a_id, r.b_id): round(r.jaccard, 9) for r in naive.collect()}
             p = {(r.a_id, r.b_id): round(r.jaccard, 9) for r in pref.collect()}
             assert p == n, (
-                f"t={t} {order}: missing {set(n) - set(p)} extra {set(p) - set(n)}"
+                f"t={t}: missing {set(n) - set(p)} extra {set(p) - set(n)}"
             )
-
-
-def test_prefix_jaccard_df_order_kills_boilerplate_fanout(spark):
-    """On a skewed corpus (every doc shares boilerplate), df-ordering
-    drops the frequent shingles from all prefixes -> ~zero candidates,
-    while hash-ordering keeps them with prob ~(1-t) -> quadratic
-    candidate pairs. Both must still return the exact result."""
-    from pyspark.sql import functions as F2
-
-    boiler = "terms and conditions apply to all services provided herein by"
-    rows = [
-        (i, f"{boiler} client {i} alpha{i} beta{i} gamma{i} delta{i} "
-            f"eps{i} zeta{i} eta{i} theta{i} iota{i} kappa{i}")
-        for i in range(150)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def cand_count(order):
-        frame = dedup.shingle_frame(docs, "doc_id", "text", shingle_n=3).select(
-            "__id",
-            F2.array_sort(
-                F2.transform(F2.col("__sh"), lambda s: F2.xxhash64(s))
-            ).alias("__h"),
-        )
-        return dedup.jaccard_prefix_candidates(
-            frame, threshold=0.8, order=order
-        ).count()
-
-    n_hash, n_df = cand_count("hash"), cand_count("df")
-    assert n_df < n_hash / 10, f"df-order should prune skew: {n_df} vs {n_hash}"
-
-    for order in ("hash", "df"):
-        got = {
-            (r.a_id, r.b_id)
-            for r in dedup.ngram_jaccard_pairs_prefix(
-                docs, "doc_id", "text", threshold=0.8, order=order
-            ).collect()
-        }
-        naive = {
-            (r.a_id, r.b_id)
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.8
-            ).collect()
-        }
-        assert got == naive
 
 
 def test_verified_near_dups_match_exact_on_testdata(spark):
@@ -404,67 +359,6 @@ def test_naive_jaccard_scale_gate(spark):
     ).count() > 0
 
 
-def test_prefix_jaccard_max_df_bounds_candidates(spark):
-    """Round-6 verdict #8: max_df is the boilerplate hard-stop. With a
-    generous max_df the result equals exact; with a tight max_df the
-    candidate fan-out collapses on a boilerplate corpus while true
-    pairs remain a subset of the exact set (documented recall trade —
-    here the boilerplate-only collisions carry no true pairs, so the
-    final pair set is unchanged)."""
-    from pyspark.sql import functions as F2
-
-    boiler = "standard legal disclaimer text shared verbatim across every doc"
-    rows = [
-        (i, f"{boiler} body {i} alpha{i} beta{i} gamma{i} delta{i} "
-            f"eps{i} zeta{i} eta{i} theta{i} iota{i} kappa{i}")
-        for i in range(120)
-    ]
-    # plant one true near-dup pair that shares its OWN rare shingles
-    rows.append((900, "unique payload shared exactly here one two three four five six"))
-    rows.append((901, "unique payload shared exactly here one two three four five sev"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    exact = {
-        (r.a_id, r.b_id)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.6
-        ).collect()
-    }
-    assert (900, 901) in exact
-
-    def cand_count(max_df):
-        frame = dedup.shingle_frame(docs, "doc_id", "text", shingle_n=3).select(
-            "__id",
-            F2.array_sort(
-                F2.transform(F2.col("__sh"), lambda s: F2.xxhash64(s))
-            ).alias("__h"),
-        )
-        return dedup.jaccard_prefix_candidates(
-            frame, threshold=0.6, order="hash", max_df=max_df
-        ).count()
-
-    # generous cap: exact result, no recall loss
-    got_loose = {
-        (r.a_id, r.b_id)
-        for r in dedup.ngram_jaccard_pairs_prefix(
-            docs, "doc_id", "text", threshold=0.6, max_df=10_000
-        ).collect()
-    }
-    assert got_loose == exact
-
-    # tight cap: fan-out bounded, result a subset that keeps the
-    # rare-shingle true pair
-    assert cand_count(5) < cand_count(None) / 5
-    got_tight = {
-        (r.a_id, r.b_id)
-        for r in dedup.ngram_jaccard_pairs_prefix(
-            docs, "doc_id", "text", threshold=0.6, max_df=5
-        ).collect()
-    }
-    assert got_tight <= exact
-    assert (900, 901) in got_tight
-
-
 def test_connected_components_reliable_checkpoint_identical(
     spark, tmp_path, distributed_graph_route
 ):
@@ -595,8 +489,10 @@ def test_auto_prune_detection_histogram_first_no_residual_cache(spark):
     (no persist, no hot-list job), and nothing stays cached in the
     session afterwards; on a boilerplate corpus the persist happens,
     prunes, and the <=20k literal path unpersists when done. Either
-    way the pair results are unchanged (identical to the explicit
-    literal-bound call on the clean corpus)."""
+    way the pair results are unchanged (identical to the unpruned
+    call on the clean corpus, where no shingle exceeds the bound)."""
+    import pytest
+
     sc = spark.sparkContext
 
     def n_cached() -> int:
@@ -626,10 +522,17 @@ def test_auto_prune_detection_histogram_first_no_residual_cache(spark):
     finally:
         dedup.df_pruned_shingles = _orig
     assert n_cached() == base  # no persist on the clean path
-    lit = dedup.ngram_jaccard_pairs_prefix(
-        docs, "doc_id", "text", threshold=0.5, prune_df=str(dedup.auto_prune_df(60))
+    unpruned = dedup.ngram_jaccard_pairs_prefix(
+        docs, "doc_id", "text", threshold=0.5, prune_df=None
     )
-    assert got_auto == {(r.a_id, r.b_id) for r in lit.collect()}
+    assert got_auto == {(r.a_id, r.b_id) for r in unpruned.collect()}
+    # "auto" is the one bound rule: a literal bound is rejected before
+    # any Spark work
+    for bad in (5, "5"):
+        with pytest.raises(ValueError, match=repr(bad)):
+            dedup.ngram_jaccard_pairs_prefix(
+                docs, "doc_id", "text", threshold=0.5, prune_df=bad
+            )
 
     # boilerplate corpus: the persist branch runs and is released
     boiler = "the same twelve words of disclaimer header repeated in every row"
@@ -644,22 +547,48 @@ def test_auto_prune_detection_histogram_first_no_residual_cache(spark):
     assert n_cached() == base  # literal path unpersisted the frame
 
 
-def test_df_pruned_shingles_literal_and_join_paths_agree(spark):
-    """The <=20k literal array_except path and the distributed
-    anti-join fallback must produce identical pruned sets."""
+def test_df_pruned_shingles_literal_and_join_paths_agree(spark, monkeypatch):
+    """The literal array_except route and the distributed anti-join
+    fallback must produce identical pruned sets. The route comes from
+    the histogram's hot count, so the literal route fetches the hot
+    list from the persisted frame in exactly one job, and both routes
+    release df_frame."""
+    from pyspark import StorageLevel
+
+    from firmable_aus_etl_spark.operators import partitioning
+
     rows = [(i, f"common words everywhere always {i} rare{i} token{i}") for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     frame = dedup.shingle_frame(docs, "doc_id", "text", shingle_n=3).select(
         "__id",
         F.array_sort(F.transform(F.col("__sh"), lambda s: F.xxhash64(s))).alias("__h"),
     )
-    lit_path = dedup.df_pruned_shingles(frame, 5)
-    old = dedup._MAX_HOT_LITERAL
-    try:
-        dedup._MAX_HOT_LITERAL = 0  # force the join fallback
-        join_path = dedup.df_pruned_shingles(frame, 5)
-    finally:
-        dedup._MAX_HOT_LITERAL = old
+    tracker = spark.sparkContext.statusTracker()
+
+    def pruned():
+        # the caller's shape: a persisted multi-partition df frame,
+        # materialized by the histogram collect the hot count is read
+        # from
+        dfs = (
+            frame.select(F.explode("__h").alias("sh"))
+            .groupBy("sh")
+            .agg(F.count("*").alias("__df"))
+            .repartition(4)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        hist = dfs.groupBy("__df").agg(F.count("*").alias("__cnt")).collect()
+        n_hot = sum(r["__cnt"] for r in hist if r["__df"] > 5)
+        assert n_hot > 0
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        out = dedup.df_pruned_shingles(frame, 5, df_frame=dfs, n_hot=n_hot)
+        jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+        assert dfs.storageLevel == StorageLevel.NONE
+        return out, jobs
+
+    lit_path, lit_jobs = pruned()
+    assert lit_jobs == 1, lit_jobs
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", 0)  # force the join fallback
+    join_path, _ = pruned()
     a = {(r["__id"], tuple(r["__h"])) for r in lit_path.collect()}
     b = {(r["__id"], tuple(r["__h"])) for r in join_path.collect()}
     # join fallback drops docs whose every shingle was pruned; the

@@ -18,6 +18,21 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "a long, b long")
 
 
+def _brute_triangles(pairs) -> int:
+    """Triangles in a simple edge set (a < b), by checking every
+    vertex triple."""
+    es = set(pairs)
+    nodes = sorted({n for p in es for n in p})
+    return sum(
+        1
+        for i, x in enumerate(nodes)
+        for j, y in enumerate(nodes[i + 1 :], i + 1)
+        if (x, y) in es
+        for z in nodes[j + 1 :]
+        if (x, z) in es and (y, z) in es
+    )
+
+
 def test_canonicalize_drops_loops_merges_directions(spark):
     raw = _edges(spark, [(1, 2), (2, 1), (3, 3), (2, 3), (2, 3)])
     rows = sorted(tuple(r) for r in undirected_simple_edges(raw).collect())
@@ -61,8 +76,8 @@ def test_summary_empty_graph(spark):
 
 
 def test_orientations_agree_on_random_graph(spark):
-    # pseudo-random graph: same triangle count under id- and
-    # degree-ranked wedge enumeration
+    # pseudo-random graph: the degree-ranked wedge enumeration counts
+    # the same triangles as a brute-force count
     state, pairs = 7, set()
     for _ in range(300):
         state = (state * 1103515245 + 12345) % (1 << 31)
@@ -72,9 +87,8 @@ def test_orientations_agree_on_random_graph(spark):
         if x != y:
             pairs.add((min(x, y), max(x, y)))
     e = _edges(spark, sorted(pairs))
-    t_deg = triangle_count(e, orient="degree").collect()[0].n_triangles
-    t_id = triangle_count(e, orient="id").collect()[0].n_triangles
-    assert t_deg == t_id > 0
+    t_deg = triangle_count(e).collect()[0].n_triangles
+    assert t_deg == _brute_triangles(pairs) > 0
 
 
 def test_degree_orientation_bounds_hub_wedges(spark):
@@ -101,8 +115,7 @@ def test_degree_orientation_bounds_hub_wedges(spark):
     d_deg = dd.select("u", "v", F.struct("dv", "v").alias("__r"))
     assert wedge_rows(d_id) == n * (n - 1) // 2  # hub fan-out blowup
     assert wedge_rows(d_deg) == 0                # bounded out-degrees
-    assert triangle_count(star, orient="degree").collect()[0].n_triangles == 0
-    assert triangle_count(star, orient="id").collect()[0].n_triangles == 0
+    assert triangle_count(star).collect()[0].n_triangles == 0
 
 
 def test_zipf_graph_degree_orientation_bounds_wedges(spark):
@@ -110,8 +123,8 @@ def test_zipf_graph_degree_orientation_bounds_wedges(spark):
     graph — hubs draw LOW ids (the adversarial alignment for id-ranked
     orientation, and the natural one: popular parts get created
     early/often). Degree orientation must shrink BOTH the total wedge
-    rows and the worst per-root fan-out by a large factor while
-    counting identical triangles. Measured numbers recorded in
+    rows and the worst per-root fan-out by a large factor, and
+    triangle_count must match a brute-force count. Measured numbers recorded in
     SKEW.md."""
     from pyspark.sql import functions as F
 
@@ -159,10 +172,9 @@ def test_zipf_graph_degree_orientation_bounds_wedges(spark):
     # sqrt(2m) out-degree bound => per-root wedges <= C(sqrt(2m), 2)
     bound = 2 * m
     assert max_deg <= bound, (max_deg, bound)
-    # identical triangle counts
-    t_deg = triangle_count(e, orient="degree").collect()[0].n_triangles
-    t_id = triangle_count(e, orient="id").collect()[0].n_triangles
-    assert t_deg == t_id > 0
+    # exact triangle count
+    t_deg = triangle_count(e).collect()[0].n_triangles
+    assert t_deg == _brute_triangles(pairs) > 0
     print(f"ZIPF-WEDGES m={m} id=(total {tot_id}, max {max_id}) "
           f"degree=(total {tot_deg}, max {max_deg}) triangles={t_deg}")
 

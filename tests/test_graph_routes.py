@@ -59,7 +59,7 @@ def _all_results(spark, route):
 
 def test_driver_and_distributed_routes_agree(spark, monkeypatch):
     driver = _all_results(spark, "driver")
-    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", -1)
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", -1)
     distributed = _all_results(spark, "distributed")
     assert driver == distributed
     labels = dict(driver["graph", "label"])
@@ -74,7 +74,7 @@ def test_driver_route_ceiling_is_inclusive(spark, monkeypatch):
     """Exactly N edges finish on the driver, N + 1 take the loops, and
     both give the labeling and summary of the other route."""
     n = 6
-    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", n)
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", n)
     # simple edges (a < b, distinct), so graph_summary sees the same
     # count; a hub keeps the label loop to one turn
     fits = [(0, i) for i in range(1, n)] + [(1, 2)]
@@ -87,9 +87,9 @@ def test_driver_route_ceiling_is_inclusive(spark, monkeypatch):
         assert stats["route"] == route
         assert stats["edges"] == (n if route == "driver" else None)
         assert stats["rounds"] == 0 if route == "driver" else stats["rounds"] > 0
-    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", n - 1)  # fits -> loops
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", n - 1)  # fits -> loops
     assert (_components(spark, fits, None, "label"), _summary(spark, fits)) == got[n]
-    monkeypatch.setattr(partitioning, "_MAX_DRIVER_EDGES", n + 1)  # over -> driver
+    monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", n + 1)  # over -> driver
     assert (_components(spark, over, None, "label"), _summary(spark, over)) == got[n + 1]
     assert got[n][1] == [(6, 6, 12, 1, 0.25)]
 

@@ -56,11 +56,28 @@ def _batch_recompute_survivors(corpus):
     }
 
 
-def test_incremental_equals_batch_recompute(spark, corpus, tmp_path):
+def test_incremental_equals_batch_recompute(spark, corpus, tmp_path, monkeypatch):
+    from firmable_aus_etl_spark import plans
+    from firmable_aus_etl_spark.operators.partitioning import local_frame
+    from firmable_aus_etl_spark.streaming import incremental
+
+    # every driver-built frame of the ingest (the empty first-batch
+    # history, the dropped ids) must be a local relation, empty or not
+    built = []
+
+    def spy(spark_, rows, schema):
+        df = local_frame(spark_, rows, schema)
+        built.append((len(rows), plans.physical_plan(df)))
+        return df
+
+    monkeypatch.setattr(incremental, "local_frame", spy)
     state = str(tmp_path / "state")
     stats = [
         ingest_increment(spark, b, state, threshold=THRESH) for b in _batches(corpus)
     ]
+    assert {0} < {n for n, _ in built}, built
+    for n, plan in built:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (n, plan)
     got = {r.doc_id for r in spark.read.parquet(f"{state}/corpus").collect()}
     want = _batch_recompute_survivors(corpus)
     assert got == want

@@ -278,3 +278,12 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+def test_local_frame_is_a_local_relation_empty_or_not(spark):
+    for rows in ([], [(1, "a"), (2, None)]):
+        df = partitioning.local_frame(spark, rows, "id long, s string")
+        plan = plans.physical_plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.schema.simpleString() == "struct<id:bigint,s:string>"
+        assert [tuple(r) for r in df.collect()] == rows

@@ -101,22 +101,15 @@ def test_no_expensive_inferred_filter_below_generates(spark):
     # on the raw scan's few tasks (the zipf30 straggler). Generates over
     # parsed arrays are *_outer + null-drop, so no such filter may
     # re-evaluate a parse-stage expression. Checked on every headline
-    # plan with a Generate, plus the two Generate sites headline does
-    # not reach at this scale: the naive shingle join and the df-order
-    # prefix join.
+    # plan with a Generate, plus the Generate site headline does not
+    # reach at this scale: the naive shingle join.
     import re
 
     import bench
-    from firmable_aus_etl_spark.datasets import load_table
-    from firmable_aus_etl_spark.operators import dedup
 
     expensive = ("regexp_replace", "concat_ws", "xxhash64(", "aggregate(", "md5(")
-    docs = load_table(spark, SF, "documents")
     frames = {name: bench.ALL_QUERIES[name](spark, SF) for name in bench.HEADLINE}
     frames["ngram_jaccard_near_dups"] = QUERIES["ngram_jaccard_near_dups"](spark, SF)
-    frames["prefix_order_df"] = dedup.ngram_jaccard_pairs_prefix(
-        docs, "doc_id", "text", shingle_n=3, threshold=0.5, order="df"
-    )
     checked, flagged = [], {}
     for name, df in frames.items():
         plan = plans.physical_plan(df)
@@ -131,7 +124,7 @@ def test_no_expensive_inferred_filter_below_generates(spark):
         )
         if hits:
             flagged[name] = hits
-    assert {"ngram_jaccard_near_dups", "prefix_order_df"} <= set(checked), checked
+    assert "ngram_jaccard_near_dups" in checked, checked
     assert not flagged, flagged
 
 
@@ -203,13 +196,13 @@ def test_tfidf_default_candidate_shuffle_keys_on_token(spark):
 
 
 def test_tfidf_sparse_regime_prefix_shuffle_keys_on_token(spark):
-    """The sparse-regime branch of the adaptive dispatch (prefix plan)
-    must keep the vocabulary-wide candidate shuffle: with broadcast
-    disabled (forcing real exchanges, as at cluster scale) every join
-    exchange keys on the token, never on blocks alone."""
+    """The sparse-regime plan of the tfidf dispatch (prefix plan) must
+    keep the vocabulary-wide candidate shuffle: with broadcast disabled
+    (forcing real exchanges, as at cluster scale) every join exchange
+    keys on the token, never on blocks alone."""
     import re
 
-    from firmable_aus_etl_spark.operators.cosine_join import cosine_join_adaptive
+    from firmable_aus_etl_spark.operators.cosine_join import cosine_prefix_join
 
     rows = [
         (i, "common", 1.0 / 61, False) for i in range(1, 62)
@@ -221,16 +214,13 @@ def test_tfidf_sparse_regime_prefix_shuffle_keys_on_token(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        dec = {}
-        df = cosine_join_adaptive(
+        df = cosine_prefix_join(
             wt,
             id_col="doc_id",
             token_col="t",
             weight_col="wt",
             threshold=0.7,
-            decision_out=dec,
         )
-        assert dec["plan"] == "prefix", dec
         plan = plans.physical_plan(df)
         keyed = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
         token_keyed = [k for k in keyed if re.search(r"\bt#", k)]

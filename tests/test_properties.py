@@ -105,14 +105,13 @@ def test_prefix_jaccard_exact_property(spark, texts, t):
             docs, "doc_id", "text", shingle_n=2, threshold=t
         ).collect()
     }
-    for order in ("hash", "df"):
-        pref = {
-            (r.a_id, r.b_id): round(r.jaccard, 9)
-            for r in dedup.ngram_jaccard_pairs_prefix(
-                docs, "doc_id", "text", shingle_n=2, threshold=t, order=order
-            ).collect()
-        }
-        assert pref == naive, (order, t)
+    pref = {
+        (r.a_id, r.b_id): round(r.jaccard, 9)
+        for r in dedup.ngram_jaccard_pairs_prefix(
+            docs, "doc_id", "text", shingle_n=2, threshold=t
+        ).collect()
+    }
+    assert pref == naive, t
 
 
 # --- asof_join / point_in_interval_join vs brute force --------------------
@@ -206,8 +205,7 @@ def test_triangle_orientations_agree_property(spark, pairs):
         else spark.createDataFrame([], "a long, b long")
     )
     e = undirected_simple_edges(raw)
-    t_deg = triangle_count(e, orient="degree").collect()[0].n_triangles
-    t_id = triangle_count(e, orient="id").collect()[0].n_triangles
+    t_deg = triangle_count(e).collect()[0].n_triangles
     # brute-force truth on the canonical edge set
     es = {(r.a, r.b) for r in e.collect()}
     nodes = sorted({n for p in es for n in p})
@@ -219,7 +217,7 @@ def test_triangle_orientations_agree_property(spark, pairs):
         if z > y
         and (x, y) in es and (y, z) in es and (x, z) in es
     )
-    assert t_deg == t_id == truth
+    assert t_deg == truth
 
 
 @given(rows=st.lists(st.tuples(st.integers(0, 50), st.integers(1, 9)),
