@@ -21,7 +21,9 @@ def spark():
 def distributed_graph_route(monkeypatch):
     """Force connected_components and graph_summary onto their
     distributed route (the label/star loops, triangle_count): with the
-    driver ceiling at -1 no edge set fits, not even an empty one."""
+    driver ceiling at -1 no edge set fits, not even an empty one. The
+    same ceiling sends dedup.df_pruned_shingles to its anti-join
+    fallback."""
     from firmable_aus_etl_spark.operators import partitioning
 
     monkeypatch.setattr(partitioning, "_MAX_DRIVER_ROWS", -1)
